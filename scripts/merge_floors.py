@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
-"""Merge an AbBench sweep log into bench_anchors/warm_minima.json.
+"""Merge a REPS sweep log into bench_anchors/warm_minima.json.
 
-Floor per query = min over the sweep's reps; where a floor already
+The log is graft.Bench's stderr under SPARK_GRAFT_REPS: one
+`[bench] <query> <secs> jobs=<n> reruns=<secs>,...` line per query. Floor per query = min over the sweep's successful reps
+(a failed rep reads -1 and is skipped); where a floor already
 exists (earlier quiet-host sessions) the merged value is by default
 the MIN of old and new — a floor only ever ratchets down. The ratchet
 has a cost (ADVICE r14): a query that LEGITIMATELY got slower keeps
@@ -13,7 +15,7 @@ sweep keep their old floor either way. A RENAMED query's stale floor
 is dropped only when --prune is passed (the default keeps it, so a
 partial sweep can't silently shrink coverage).
 
-Usage: merge_floors.py <ab_log> [--prune] [--overwrite]
+Usage: merge_floors.py <bench_stderr_log> [--prune] [--overwrite]
 """
 import json, re, sys
 
@@ -24,10 +26,13 @@ anchor = "bench_anchors/warm_minima.json"
 
 new = {}
 for line in open(log_path):
-    m = re.match(r"\[ab\] (\S+)\s+((?:\s*\d+\.\d+)+)$", line.rstrip())
+    m = re.match(r"\[bench\] (\S+) (-?[\d.]+) jobs=\d+(?: reruns=(\S+))?$",
+                  line.rstrip())
     if m:
-        times = [float(t) for t in m.group(2).split()]
-        new[m.group(1)] = round(min(times), 2)
+        reps = [m.group(2)] + (m.group(3).split(",") if m.group(3) else [])
+        times = [float(t) for t in reps if float(t) >= 0]
+        if times:
+            new[m.group(1)] = round(min(times), 2)
 
 try:
     old = json.load(open(anchor))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
@@ -45,12 +44,8 @@ object FaultProbe {
   def main(args: Array[String]): Unit = {
     val ckptDir =
       java.nio.file.Files.createTempDirectory("graft_fault_ckpt").toString
-    val spark = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Session.builder(4)
       .master("local[4,2]") // 4 threads, maxFailures = 2
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     // runtime conf, NOT builder conf: a builder conf lands in the
     // SparkConf, which every newSession() inherits — scenario 4's

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{ExecSubqueryExpression, ReusedSubqueryExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -159,24 +160,10 @@ object ScalingCurve {
       val qe = df.queryExecution
       val outRows = qe.toRdd.count()
       val secs = (System.nanoTime() - t0) / 1e9
-      // listener events dispatch asynchronously; poll until the
-      // sub-execution count is stable (construction finished before
-      // the final action, so this settles fast)
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 2 && waited < 3000) {
-        val now = subSeen.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-        Thread.sleep(100)
-        waited += 100
-      }
-      // a silent timeout here would DEFLATE the fitted exponent (the
-      // exact blind spot the listener closes) — make it visible
-      if (stable < 2)
-        System.err.println(s"[curve]   WARN sub-execution count did " +
-          s"not stabilize in ${waited}ms (subs=${subSeen.get()}, " +
-          s"last=$last): row volume may be undercounted")
+      // listener events dispatch asynchronously: drain the bus so
+      // every sub-execution is counted (a missed one would DEFLATE the
+      // fitted exponent — the exact blind spot the listener closes)
+      ListenerDrain(spark.sparkContext)
       val (total, scan) = rowVolumes(qe.executedPlan, seenCaches)
       spark.catalog.clearCache()
       System.err.println(s"[curve]   subs=${subSeen.get()} " +
@@ -195,21 +182,10 @@ object ScalingCurve {
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES",
       "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1")
       .split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val ampSkip = sys.env.getOrElse("SPARK_GRAFT_AMP_SKIP", "")
       .split(",").filter(_.nonEmpty).toSeq
-    val spark = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.files.maxPartitionBytes", 4 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter {

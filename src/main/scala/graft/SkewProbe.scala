@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -96,14 +97,8 @@ object SkewProbe {
     s.sparkContext.addSparkListener(listener)
     try {
       df.queryExecution.toRdd.count()
-      // listener events dispatch asynchronously — poll to stability
-      // (the ScalingCurve drain discipline)
-      var last = -1L; var stable = 0; var waited = 0
-      while (stable < 2 && waited < 3000) {
-        val now = stageWrites.values.map(_.size.toLong).sum
-        if (now == last) stable += 1 else { stable = 0; last = now }
-        Thread.sleep(100); waited += 100
-      }
+      // listener events dispatch asynchronously: drain before reading
+      ListenerDrain(s.sparkContext)
       val perStage = stageWrites.toSeq
         .map { case (sid, b) => b.synchronized { (sid, b.sum, b.max) } }
         .filter(_._2 > 0L)
@@ -173,12 +168,8 @@ object SkewProbe {
 
   def main(args: Array[String]): Unit = {
     val srcSf = args.lift(0).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .master("local[8]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // local[8]: the skew split needs 8 mappers (scaladoc)
+    val spark = Session.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     var failed = false
     def check(name: String, ok: Boolean, detail: String): Unit = {

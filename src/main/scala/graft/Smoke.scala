@@ -8,6 +8,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
+    // deliberately not Session.builder: `entry` must work on a
+    // caller-built session that carries none of the bench conf
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.shuffle.partitions", "4")

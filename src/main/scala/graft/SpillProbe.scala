@@ -87,16 +87,11 @@ object SpillProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // few, LARGE partitions: at sf0.1 the default 32 reducers give
-      // ~2 MB partitions that fit even a starved task — 4 reducers
-      // reproduce the per-partition volume : task-memory ratio of a
-      // cluster-scale run, which is the regime under probe
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    // few, LARGE partitions: at sf0.1 the default 32 reducers give
+    // ~2 MB partitions that fit even a starved task — 4 reducers
+    // reproduce the per-partition volume : task-memory ratio of a
+    // cluster-scale run, which is the regime under probe
+    val spark = Session.builder(4)
       // the degraded past-broadcast-ceiling join path (the Router
       // scaladoc's 8 GB production ceiling, unreachable at sf0.1):
       // fan-out joins run sort-merge, the shape whose sorts must
@@ -126,7 +121,6 @@ object SpillProbe {
       // its floor anyway; pin it so the first page allocation always
       // succeeds and pressure exercises spilling, not allocation
       .config("spark.buffer.pageSize", "1m")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

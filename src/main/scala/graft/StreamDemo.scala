@@ -3,7 +3,6 @@ package graft
 import java.sql.Timestamp
 
 import graft.streaming.{ChannelProcessor, ChannelStream, Ingest}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -27,10 +26,7 @@ object StreamDemo {
       .getOrElse("/tmp/stream_demo")
     val useTws = args.contains("--tws")
     val sysMsgs = args.contains("--system-messages")
-    val builder = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = Session.builder()
     if (useTws) builder.config("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val spark = builder.getOrCreate()

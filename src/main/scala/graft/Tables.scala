@@ -32,8 +32,8 @@ object Tables {
     * microsecond timestamp (matches DuckDB's ns value truncated to us).
     */
   private def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    // All graft-owned session builders (Verify/Bench/Smoke/AbBench/
-    // BenchProfile/SparkSpec) pre-set this flag at session build, so
+    // Every graft-owned session (Session.builder, used by Verify,
+    // Bench, the probes and SparkSpec; Smoke) pre-sets this flag, so
     // shared-session behavior never depends on whether an events query
     // ran first; this set is the idempotent shim for CALLER-owned
     // sessions feeding nanos-era events parquet through Tables.

@@ -26,14 +26,7 @@ object ZipfTestdata {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("/tmp/graft_zipf/sf0.01")
     val hotPct = args.lift(2).map(_.toInt).getOrElse(70)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     zipfify(spark, src, out, hotPct)
     spark.stop()

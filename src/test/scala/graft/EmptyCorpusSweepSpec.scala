@@ -16,16 +16,24 @@ class EmptyCorpusSweepSpec extends SparkSpec {
     * run on a small thread pool (guide §2.6 — independent jobs
     * overlap): the four 374-query sweeps were ~12 min of the default
     * suite's wall serially, dominated by per-query planning and
-    * scheduling that parallelizes cleanly across driver threads. */
+    * scheduling that parallelizes cleanly across threads. A
+    * sweep that outlives SweepTimeout fails naming the queries still
+    * running instead of hanging the suite. */
   private def sweep(dir: String): Seq[String] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
+    import scala.jdk.CollectionConverters._
+    // the queries share one session: two of them registering the same
+    // temp-view name would race each other's view on the pool
+    assert(viewClashes.isEmpty, s"temp-view names shared across " +
+      s"queries race in a concurrent sweep: ${viewClashes.mkString("; ")}")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val running = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     try {
       val futs = SparkEntry.queries.toSeq.sortBy(_._1).map {
         case (name, fn) =>
           Future {
+            running.add(name)
             try { fn(spark, dir).collect(); None }
             catch {
               case e: Throwable =>
@@ -33,11 +41,40 @@ class EmptyCorpusSweepSpec extends SparkSpec {
                   .map(x => Option(x.getMessage).getOrElse(""))
                   .mkString(" | ").take(200)
                 Some(s"$name -> $m")
-            }
+            } finally running.remove(name)
           }
       }
-      Await.result(Future.sequence(futs), Duration.Inf).flatten
-    } finally pool.shutdown()
+      try Await.result(Future.sequence(futs), SweepTimeout).flatten
+      catch { case _: TimeoutException =>
+        fail(s"sweep over $dir exceeded $SweepTimeout; still running: " +
+          running.asScala.toSeq.sorted.mkString(", ") +
+          s"; not started: ${futs.count(!_.isCompleted) - running.size}")
+      }
+    } finally pool.shutdownNow()
+  }
+
+  private val SweepTimeout = scala.concurrent.duration.Duration(15, "min")
+
+  /** `createOrReplaceTempView("name")` call sites in src/main sharing
+    * one name, as "name: file:line, file:line". Fails if a call site
+    * names its view by anything but a literal (the scan would miss it)
+    * or if there are no sites at all (the scan would be vacuous). */
+  private lazy val viewClashes: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val call = "createOrReplaceTempView\\(".r
+    val literal = "createOrReplaceTempView\\(\"([^\"]+)\"\\)".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val sites = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      _ = assert(call.findAllIn(line).size == literal.findAllIn(line).size,
+        s"non-literal temp-view name at $f:${i + 1}: $line")
+      m <- literal.findAllMatchIn(line)
+    } yield m.group(1) -> s"$f:${i + 1}"
+    assert(sites.nonEmpty, "no temp-view call sites found under src/main")
+    sites.groupBy(_._1).collect { case (v, ss) if ss.size > 1 =>
+      s"$v: ${ss.map(_._2).mkString(", ")}" }.toSeq.sorted
   }
 
   test("every query survives a fully-empty corpus") {

@@ -88,15 +88,10 @@ object SparkSpec {
   private[graft] val streamCounter = new java.util.concurrent.atomic.AtomicInteger
 
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .master("local[2]")
+    val s = Session.builder(2)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

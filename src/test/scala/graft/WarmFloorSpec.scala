@@ -1,13 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Pins [[Bench.loadWarmFloors]]'s hand-rolled parse (round-14 ADVICE
   * fix): the flat top-level format parses including scientific
   * notation, a nested object's inner pairs don't leak in as floors,
   * and the absent-file case stays silent-empty (the fresh-checkout
   * path the driver hits when cwd isn't the repo). */
-class WarmFloorSpec extends AnyFunSuite {
+class WarmFloorSpec extends SparkSpec {
 
   private def write(content: String): String = {
     val f = java.nio.file.Files.createTempFile("warm", ".json")
@@ -54,5 +52,34 @@ class WarmFloorSpec extends AnyFunSuite {
     assert(real.size >= 371,
       s"the seeded anchor file should cover the full surface: ${real.size}")
     assert(real.values.forall(v => v > 0 && v < 1000))
+  }
+
+  test("timed runs attribute every Spark job to the query that started it") {
+    val sf = "/root/testdata/sf0.001"
+    val (a, b) = ("q1_pricing_summary", "route_client_fanout")
+    val sc = spark.sparkContext
+    val jobs = new Bench.JobCounts(sc)
+    val all = new java.util.concurrent.atomic.AtomicLong
+    val every = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        all.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerDrain(sc) // no earlier job leaks in
+    sc.addSparkListener(every)
+    try {
+      assert(Bench.timed(spark, a, SparkEntry.queries(a), sf) >= 0)
+      val ja = jobs(a)
+      assert(Bench.timed(spark, b, SparkEntry.queries(b), sf) >= 0)
+      val jb = jobs(b)
+      assert(ja >= 1 && jb >= 1, s"$a=$ja $b=$jb")
+      assert(jobs("never_run") == 0)
+      assert(jobs(a) == ja, s"$b's jobs leaked into $a's group")
+      assert(ja + jb == all.get(),
+        s"$a=$ja + $b=$jb != ${all.get()} jobs started in the window")
+    } finally {
+      sc.removeSparkListener(every)
+      sc.removeSparkListener(jobs)
+    }
   }
 }

@@ -343,22 +343,11 @@ class CurationSpec extends SparkSpec {
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    // deterministic listener drain: listenerBus.waitUntilEmpty() is
-    // private[spark] (= public in bytecode), so reflection reaches it;
-    // a fixed sleep is only the fallback — under CI load a sleep can
+    // deterministic listener drain — under CI load a fixed sleep can
     // both false-fail (baseline event lands late) and false-pass (a
     // re-introduced sizing job's event lands late)
     def drainBus(): Unit =
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" &&
-            m.getParameterCount == 0) match {
-          case Some(m) => m.invoke(bus)
-          case None => Thread.sleep(1000)
-        }
-      } catch { case _: Throwable => Thread.sleep(1000) }
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       // baseline: a bare documents read runs exactly one plan-time
