@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Partitioning for FAN-OUT stages — C(k,2) pair explodes, wedge
   * self-joins, per-key rank windows — whose downstream volume AQE
@@ -17,11 +19,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   *     a malformed or non-positive value fails naming the conf);
   *   - otherwise `max(defaultParallelism, inputBytes / 128 MB)`,
   *     capped at [[MaxSpread]], where inputBytes is the byte size of
-  *     the plan's LEAF scans (real file sizes, not post-join
+  *     the plan's FILE-SCAN leaves (real file sizes, not post-join
   *     estimates — those inflate multiplicatively and would oversize
-  *     the spread). On the driver's one-row-group testdata the bytes
-  *     term is ~0, so the local default stays `defaultParallelism`
-  *     (= total cores) and the bench remains comparable; on a
+  *     the spread; see [[scanBytes]]). On the one-row-group
+  *     testdata the bytes term is ~0, so the local default stays
+  *     `defaultParallelism` (= total cores) and the bench remains
+  *     comparable; on a
   *     many-TB deployment the same code right-sizes the fan-out
   *     exchanges from data volume, the scaling VERDICT r15 item 7
   *     asked for. The spread always moves only proxy-sized frames
@@ -52,12 +55,22 @@ object Spread {
         math.max(math.max(defaultPar, 1), byBytes)
     }
 
-  private def n(df: DataFrame): Int = {
+  /** Bytes of the plan's FILE-SCAN leaves. Any other leaf counts 0, so
+    * a plan without file scans falls back to `defaultParallelism`: a
+    * checkpoint's `LogicalRDD` reports the estimate of the plan it
+    * replaced (a cross join's is the product of its sides), and cached
+    * or local relations are not input volume either. */
+  private[graft] def scanBytes(plan: LogicalPlan): BigInt =
+    plan.collectLeaves().collect {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.stats.sizeInBytes
+    }.sum
+
+  private[graft] def n(df: DataFrame): Int = {
     val s = df.sparkSession
-    val leafBytes = df.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
     partitions(s.conf.getOption("graft.fanoutPartitions"),
-      s.sparkContext.defaultParallelism, leafBytes)
+      s.sparkContext.defaultParallelism,
+      scanBytes(df.queryExecution.optimizedPlan))
   }
 
   /** Round-robin spread before a map-side explode / broadcast-probe

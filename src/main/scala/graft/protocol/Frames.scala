@@ -1,6 +1,8 @@
 package graft.protocol
 
+import graft.plans.FrameJson
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -63,10 +65,13 @@ object Frames {
   def isJsonPayload(payload: Column): Column =
     payload.startsWith("{") || payload.startsWith("[")
 
-  /** Structured parse of a JSON payload into the protocol envelope. */
+  /** Structured parse of a JSON payload into the protocol envelope;
+    * null for a payload that is not JSON. The gate sits inside the
+    * call, so every field read of one payload is the same
+    * `from_json(..)` subexpression and codegen parses it once. */
   def parsePayload(payload: Column): Column =
-    when(isJsonPayload(payload),
-      from_json(payload, payloadSchema, Map("mode" -> "PERMISSIVE")))
+    from_json(when(isJsonPayload(payload), payload), payloadSchema,
+      Map("mode" -> "PERMISSIVE"))
 
   /** Full parse: raw frame -> struct(op, seq, channel, message, sender,
     * b, cid, json). Null struct fields model the reference's
@@ -85,13 +90,15 @@ object Frames {
       payload.as("payload"))
   }
 
-  /** Serialize (O2): opcode + '|' + JSON payload with `_q` injected.
-    * `seq` is supplied by the caller (a `row_number() % 100` window —
-    * the mod-100 counter of `lib/util.js:13,186-197`). */
+  /** Serialize (O2): opcode + '|' + JSON payload with `_q` injected,
+    * byte for byte `concat(op, "|", to_json(struct(channel AS c,
+    * message AS m, sender AS s, seq AS _q)))`, written by the native
+    * [[graft.plans.FrameJson]]. `op`, `channel`, `message` and `sender`
+    * are strings. `seq` is supplied by the caller (a `row_number() %
+    * 100` window — the mod-100 counter of `lib/util.js:13,186-197`). */
   def serializeFrame(op: Column, channel: Column, message: Column,
                      sender: Column, seq: Column): Column =
-    concat(op, lit("|"),
-      to_json(struct(
-        channel.as("c"), message.as("m"), sender.as("s"),
-        seq.cast(IntegerType).as("_q"))))
+    PlanBridge.column(op, channel, message, sender, seq.cast(IntegerType)) {
+      case Seq(o, c, m, s, q) => FrameJson(o, c, m, s, q)
+    }
 }

@@ -43,11 +43,21 @@ object ChannelStream {
   case class Delivery(channel: String, cid: Long, sid: String,
       message: String, tsMillis: Long, origin: String)
 
-  /** Order within a micro-batch follows event time then op (the
-    * reference processes frames in arrival order; a batch has no
-    * arrival order, so we impose a deterministic one). */
+  /** Order within a micro-batch follows event time then op then cid
+    * (the reference processes frames in arrival order; a batch has no
+    * arrival order, so we impose a deterministic one). Compared field by
+    * field, with no key tuple per comparison; the sort is stable. */
+  private val eventOrder: Ordering[ChannelEvent] = (a, b) => {
+    val t = java.lang.Long.compare(a.tsMillis, b.tsMillis)
+    if (t != 0) t
+    else {
+      val o = a.op.compareTo(b.op)
+      if (o != 0) o else java.lang.Long.compare(a.cid, b.cid)
+    }
+  }
+
   private def ordered(events: Iterator[ChannelEvent]): Seq[ChannelEvent] =
-    events.toSeq.sortBy(e => (e.tsMillis, e.op, e.cid))
+    events.toSeq.sorted(eventOrder)
 
   /** The shared transition core, used by BOTH stateful operators (this
     * class's `flatMapGroupsWithState` path and [[ChannelProcessor]]'s
@@ -63,16 +73,25 @@ object ChannelStream {
     * transform. Notices fire only on actual state changes (duplicate
     * join / unknown leave emit nothing, matching the hub's idempotent
     * membership ops).
+    *
+    * Fan-out walks the members in cid order. That sorted roster is kept
+    * across events and rebuilt only after a J/L/U/K event changes the
+    * membership, so a run of messages costs one walk each, not one sort
+    * each.
     */
   def applyEvents(channel: String, initial: Map[Long, String],
       events: Iterator[ChannelEvent], systemMessages: Boolean)
       : (Map[Long, String], Seq[Delivery]) = {
     var members = initial
+    var sorted: Array[(Long, String)] = null // null: stale, rebuild on use
+    def roster: Array[(Long, String)] = {
+      if (sorted == null) sorted = members.toArray.sortBy(_._1)
+      sorted
+    }
     val out = Seq.newBuilder[Delivery]
     def notice(msg: String, ts: Long, except: Long): Unit = if (systemMessages)
-      out ++= members.toSeq.sortBy(_._1).collect { case (cid, sid) if cid != except =>
-        Delivery(channel, cid, sid, msg, ts, "system")
-      }
+      for ((cid, sid) <- roster if cid != except)
+        out += Delivery(channel, cid, sid, msg, ts, "system")
     for (e <- ordered(events)) e.op match {
       case "J" =>
         // duplicate join is a FULL no-op (lib/ChannelHub.js:65-69):
@@ -81,6 +100,7 @@ object ChannelStream {
         // delivery metadata to another node with no notice emitted
         if (!members.contains(e.cid)) {
           members = members.updated(e.cid, e.sid)
+          sorted = null
           if (systemMessages) {
             // welcome to the joiner (engine-io.server.js:75-80) ...
             out += Delivery(channel, e.cid, e.sid,
@@ -90,14 +110,19 @@ object ChannelStream {
           }
         }
       case "L" | "U" | "K" =>
-        val wasMember = members.contains(e.cid)
-        members = members - e.cid
-        if (wasMember) notice(s"system:leave:${e.cid}", e.tsMillis, except = e.cid)
+        if (members.contains(e.cid)) {
+          members = members - e.cid
+          sorted = null
+          notice(s"system:leave:${e.cid}", e.tsMillis, except = e.cid)
+        }
       case "M" =>
         // fan-out to current members; sender echo included iff sender
         // subscribed — matches channel.message emit (lib/ChannelHub.js:275-277)
-        out ++= members.toSeq.sortBy(_._1).map { case (cid, sid) =>
-          Delivery(channel, cid, sid, e.message, e.tsMillis, e.origin)
+        val r = roster
+        var i = 0
+        while (i < r.length) {
+          out += Delivery(channel, r(i)._1, r(i)._2, e.message, e.tsMillis, e.origin)
+          i += 1
         }
       case "S" | "I" =>
         // NODE_STATE merge (lib/QutyCluster.js:557-577) and NODE_INFO

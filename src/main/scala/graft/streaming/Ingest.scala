@@ -34,20 +34,28 @@ import org.apache.spark.sql.functions._
 object Ingest {
 
   /** Decode the wire frame ("{op}|{json}" per `lib/util.js:176-246`)
-    * out of the Kafka value bytes; keep source provenance columns. */
-  def parseFrames(kafkaShaped: DataFrame): DataFrame =
+    * out of the Kafka value bytes; keep source provenance columns.
+    * The payload's JSON is parsed ONCE per row: `from_json` is
+    * projected into one struct column that the field reads of the next
+    * projection share (CollapseProject does not inline a non-cheap
+    * expression into several references), instead of one parse per
+    * field. */
+  def parseFrames(kafkaShaped: DataFrame): DataFrame = {
+    val raw = col("value").cast("string")
     kafkaShaped.select(
       col("topic"), col("partition"), col("offset"),
       col("timestamp").as("kafka_ts"),
       col("key").cast("string").as("key"),
-      Frames.parseFrame(col("value").cast("string")).as("frame"))
+      Frames.frameOp(raw).as("op"),
+      Frames.parsePayload(Frames.framePayloadOf(raw)).as("parsed"))
       .select(col("topic"), col("partition"), col("offset"),
-        col("kafka_ts"), col("key"),
-        col("frame.op").as("op"), col("frame.seq").as("seq"),
-        col("frame.channel").as("channel"),
-        col("frame.message").as("message"),
-        col("frame.sender").as("sender"),
-        col("frame.cid").as("cid"))
+        col("kafka_ts"), col("key"), col("op"),
+        col("parsed._q").as("seq"),
+        col("parsed.c").as("channel"),
+        col("parsed.m").as("message"),
+        col("parsed.s").as("sender"),
+        col("parsed.cid").as("cid"))
+  }
 
   /** Drop frames the broker re-delivered: (topic, partition, offset) is
     * the Kafka identity of a record. Watermark bounds the dedup state. */

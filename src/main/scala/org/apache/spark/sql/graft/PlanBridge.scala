@@ -20,4 +20,12 @@ object PlanBridge {
   def expr(spark: org.apache.spark.sql.SparkSession,
       c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     spark.asInstanceOf[classic.SparkSession].expression(c)
+
+  /** A native catalyst Expression over Columns, as a Column, with no
+    * session: each input enters as a placeholder node that the session
+    * converter replaces when the Column is used. */
+  def column(cols: org.apache.spark.sql.Column*)(
+      build: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+        org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
+    classic.ExpressionUtils.column(build(cols.map(classic.ExpressionUtils.expression)))
 }

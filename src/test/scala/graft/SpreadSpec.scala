@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Spread.partitions]] (VERDICT r15 item 7 — the scaladoc's
@@ -52,5 +53,23 @@ class SpreadScanSpec extends SparkSpec {
     s2.conf.unset("graft.scanFanout")
     assert(Spread.fanoutScan(df).queryExecution.logical
       ne df.queryExecution.logical)
+  }
+
+  test("only file-scan leaves size the spread: a checkpointed cross join uses cores") {
+    // the checkpoint's LogicalRDD reports the estimate of the cross join
+    // it replaced (the product of its sides), though it holds no rows
+    val df = spark.range(200000).toDF("a")
+      .crossJoin(spark.range(200000).toDF("b"))
+      .where(col("a") < 0)
+      .localCheckpoint()
+    val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.map(_.stats.sizeInBytes).sum > Spread.TargetPartitionBytes * 1000,
+      s"estimate not inflated: ${leaves.map(_.stats)}")
+    assert(Spread.scanBytes(df.queryExecution.optimizedPlan) == 0)
+    assert(Spread.n(df) == spark.sparkContext.defaultParallelism)
+    // a parquet scan still counts its bytes
+    val dir = java.nio.file.Files.createTempDirectory("spread_scan").toString
+    spark.range(1000).write.mode("overwrite").parquet(dir)
+    assert(Spread.scanBytes(spark.read.parquet(dir).queryExecution.optimizedPlan) > 0)
   }
 }

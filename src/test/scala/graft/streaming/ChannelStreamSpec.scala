@@ -114,6 +114,62 @@ class ChannelStreamSpec extends SparkSpec {
     assert(out.map(_.message) == Seq("system:welcome:1"))
   }
 
+  test("kept roster: seeded J/L/U/K/M/S folds equal the sort-per-message fold") {
+    // the replaced fold, kept here as the reference: every fan-out and
+    // notice re-sorts the whole member map
+    def sortEach(channel: String, initial: Map[Long, String],
+        events: Seq[ChannelEvent], systemMessages: Boolean)
+        : (Map[Long, String], Seq[Delivery]) = {
+      var members = initial
+      val out = Seq.newBuilder[Delivery]
+      def notice(msg: String, ts: Long, except: Long): Unit = if (systemMessages)
+        out ++= members.toSeq.sortBy(_._1).collect { case (cid, sid) if cid != except =>
+          Delivery(channel, cid, sid, msg, ts, "system")
+        }
+      for (e <- events.sortBy(e => (e.tsMillis, e.op, e.cid))) e.op match {
+        case "J" => if (!members.contains(e.cid)) {
+          members = members.updated(e.cid, e.sid)
+          if (systemMessages) {
+            out += Delivery(channel, e.cid, e.sid, s"system:welcome:${e.cid}",
+              e.tsMillis, "system")
+            notice(s"system:join:${e.cid}", e.tsMillis, except = e.cid)
+          }
+        }
+        case "L" | "U" | "K" =>
+          val was = members.contains(e.cid)
+          members = members - e.cid
+          if (was) notice(s"system:leave:${e.cid}", e.tsMillis, except = e.cid)
+        case "M" => out ++= members.toSeq.sortBy(_._1).map { case (cid, sid) =>
+          Delivery(channel, cid, sid, e.message, e.tsMillis, e.origin)
+        }
+        case _ =>
+      }
+      (members, out.result())
+    }
+    val ops = Array("J", "J", "J", "L", "U", "K", "M", "M", "M", "S", "I")
+    for (seed <- 1L to 40L; systemMessages <- Seq(false, true)) {
+      val rng = new java.util.SplittableRandom(seed)
+      var now = Map.empty[Long, String]
+      var was = now
+      for (batch <- 1 to 6) {
+        // few timestamps and cids, so ties and repeats are common
+        val events = Seq.fill(rng.nextInt(60)) {
+          val op = ops(rng.nextInt(ops.length))
+          ChannelEvent(rng.nextInt(8).toLong, op, "ch", rng.nextInt(24).toLong,
+            s"n${rng.nextInt(3)}", Seq("publisher", "node")(rng.nextInt(2)),
+            s"m${rng.nextInt(1000)}")
+        }
+        val (m1, d1) = applyEvents("ch", now, events.iterator, systemMessages)
+        val (m2, d2) = sortEach("ch", was, events, systemMessages)
+        withClue(s"seed $seed batch $batch systemMessages=$systemMessages") {
+          assert(m1 == m2)
+          assert(d1 == d2)
+        }
+        now = m1; was = m2
+      }
+    }
+  }
+
   test("streaming status snapshot reports progress of the active query") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[ChannelEvent]

@@ -3,7 +3,11 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.SparkSpec
+import graft.protocol.Frames
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 /** End-to-end ingestion pipeline over the Kafka wire shape: raw frame
@@ -33,6 +37,50 @@ class IngestSpec extends SparkSpec {
       for (b <- batches) { input.addData(b); q.processAllAvailable() }
       spark.table(name).as[ChannelStream.Delivery].collect().toSeq
     } finally q.stop()
+  }
+
+  private val frames = Seq(
+    """J|{"c":"news","cid":"41","s":"node-1","_q":3}""",
+    """M|{"c":"news","m":"hi \\"there\\"","s":"pub-1","_q":99}""",
+    """M|{"c":"news","m":"x","b":true}""", """L|{"c":"news","cid":"41"}""",
+    """K|{"c":"news","cid":"12"}""", """M|{"c":unterminated""",
+    """M|["c","news"]""", "M|plain text", "M|", "no-pipe", "", """|{"c":"x"}""",
+    """S|{"c":null,"m":7}""", """M|{"c":"a|b","m":"é中"}""")
+
+  private def kafka: DataFrame =
+    spark.sparkContext.parallelize(frames.zipWithIndex.map { case (f, i) =>
+      (null: Array[Byte], f.getBytes("UTF-8"), "quty-frames", 0, i.toLong,
+        new Timestamp(1000L))
+    }, 2).toDF("key", "value", "topic", "partition", "offset", "timestamp")
+
+  test("parseFrames parses each frame's JSON once: at most 2 from_json in the plan") {
+    val plan = Ingest.channelEvents(Ingest.parseFrames(kafka))
+      .queryExecution.optimizedPlan
+    val parses = plan.collect { case p =>
+      p.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+    }.sum
+    assert(parses >= 1 && parses <= 2, s"$parses from_json calls in:\n$plan")
+  }
+
+  test("parseFrames matches the field-by-field parse it replaced") {
+    // the replaced spelling: one conditional from_json per field
+    def oldParse(df: DataFrame): DataFrame = {
+      val payload = Frames.framePayloadOf(col("value").cast("string"))
+      val parsed = when(Frames.isJsonPayload(payload), from_json(payload,
+        Frames.payloadSchema, Map("mode" -> "PERMISSIVE")))
+      df.select(col("topic"), col("partition"), col("offset"),
+        col("timestamp").as("kafka_ts"), col("key").cast("string").as("key"),
+        Frames.frameOp(col("value").cast("string")).as("op"),
+        parsed.getField("_q").as("seq"), parsed.getField("c").as("channel"),
+        parsed.getField("m").as("message"), parsed.getField("s").as("sender"),
+        parsed.getField("cid").as("cid"))
+    }
+    val now = Ingest.parseFrames(kafka)
+    val was = oldParse(kafka)
+    assert(now.schema == was.schema)
+    assert(now.orderBy("offset").collect().toSeq == was.orderBy("offset").collect().toSeq)
+    assert(Ingest.channelEvents(now).collect().toSeq.sortBy(_.toString) ==
+      Ingest.channelEvents(was).collect().toSeq.sortBy(_.toString))
   }
 
   test("frames flow end-to-end: join then message then delivery") {
