@@ -1,0 +1,87 @@
+#!/usr/bin/env python3
+"""Summarize interleaved A/B runs written by scripts/perf_ab.sh.
+
+For each workload and each end-to-end metric of BENCHMARK.json, over the
+untraced runs: each side's median and quartiles, the pairs (base and
+change on one seed) each side wins (ties count for neither), and whether
+the gain rule holds: the change wins at least 9/10 of at least ten
+pairs, and its median beats the base median by more than the distance
+between the base's quartiles.
+
+Usage: python3 scripts/perf_ab_summary.py <perf_ab jsonl>...
+"""
+import json
+import os
+import statistics
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def quartiles(xs):
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def load(paths):
+    """{workload: {seed: {side: [metrics, ...]}}} of correct untraced runs,
+    and a count of the runs left out per (workload, reason)."""
+    runs, left_out = {}, {}
+    for path in paths:
+        with open(path) as f:
+            for line in f:
+                if not line.strip():
+                    continue
+                rec = json.loads(line)
+                w, res = rec["workload"], rec["result"]
+                if rec.get("trace", 0):
+                    reason = "traced"
+                elif not res:
+                    reason = "no result"
+                elif not res["correct"] or res.get("failed", 0):
+                    reason = "incorrect or failed"
+                else:
+                    seeds = runs.setdefault(w, {}).setdefault(rec["seed"], {})
+                    seeds.setdefault(rec["side"], []).append(
+                        {k: v["value"] for k, v in res["metrics"].items()})
+                    continue
+                key = (w, reason)
+                left_out[key] = left_out.get(key, 0) + 1
+    return runs, left_out
+
+
+def main(paths):
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        metrics = json.load(f)["end_to_end"]
+    runs, left_out = load(paths)
+    for (w, reason), n in sorted(left_out.items()):
+        print(f"{w}: {n} run(s) left out ({reason})")
+    print(f"{'workload':<14} {'metric':<17} {'pairs':>5} {'base median [q1, q3]':>30} "
+          f"{'change median [q1, q3]':>30} {'wins c/b':>8}  gain rule")
+    for w in sorted(runs):
+        # k-th base run of a seed pairs with its k-th change run
+        pairs = [(b, c) for sides in runs[w].values()
+                 for b, c in zip(sides.get("base", []), sides.get("change", []))]
+        for m in metrics:
+            name, lower = m["name"], m["better"] == "lower"
+            ps = [(b[name], c[name]) for b, c in pairs if name in b and name in c]
+            if not ps:
+                continue
+            base = quartiles(sorted(b for b, _ in ps))
+            change = quartiles(sorted(c for _, c in ps))
+            wins = sum((c < b) if lower else (c > b) for b, c in ps)
+            losses = sum((c > b) if lower else (c < b) for b, c in ps)
+            gap = base[1] - change[1] if lower else change[1] - base[1]
+            met = len(ps) >= 10 and wins >= 0.9 * len(ps) and gap > base[2] - base[0]
+            fmt = lambda q: f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
+            print(f"{w:<14} {name:<17} {len(ps):>5} {fmt(base):>30} {fmt(change):>30} "
+                  f"{wins:>3}/{losses:<4}  {'met' if met else 'not met'}"
+                  f" (change {100 * (change[1] / base[1] - 1):+.1f}%)")
+
+
+if __name__ == "__main__":
+    if len(sys.argv) < 2:
+        sys.exit(__doc__.strip().splitlines()[-1])
+    main(sys.argv[1:])

@@ -65,17 +65,24 @@ object Ingest {
       .dropDuplicatesWithinWatermark("topic", "partition", "offset")
 
   /** Narrow to the stateful router's input type. Malformed frames
-    * (null op — the reference's `false` return) are filtered here, the
-    * streaming analog of the parse guard at `lib/Server.js:396-401`. */
+    * (null op — the reference's `false` return — no channel, or a
+    * `cid` that is not a number) yield no event, the streaming analog
+    * of the parse guard at `lib/Server.js:396-401`. A missing `cid`
+    * reads as -1. */
   def channelEvents(parsed: DataFrame): Dataset[ChannelStream.ChannelEvent] = {
     import parsed.sparkSession.implicits._
+    val cid = col("cid").try_cast("long")
     parsed
       .filter(col("op").isNotNull && col("channel").isNotNull)
       .select(
         unix_millis(col("kafka_ts")).as("tsMillis"),
         col("op"),
         col("channel"),
-        coalesce(col("cid").cast("long"), lit(-1L)).as("cid"),
+        // the array is null for a non-numeric cid, so explode yields no
+        // row; a Filter on cid would be pushed below the parse and
+        // parse the JSON again for each field it reads
+        explode(when(col("cid").isNull, array(lit(-1L)))
+          .when(cid.isNotNull, array(cid))).as("cid"),
         coalesce(col("sender"), lit("")).as("sid"),
         // publisher-originated unless the sender field names a node —
         // the provenance split of lib/QutyCluster.js:600-616

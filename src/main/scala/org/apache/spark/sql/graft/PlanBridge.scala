@@ -3,10 +3,11 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
-/** Bridge to the one `private[sql]` entry point a custom whole-operator
-  * API needs: wrapping a hand-built [[LogicalPlan]] back into a public
-  * `DataFrame`. Lives under `org.apache.spark.sql` for package-private
-  * access; contains no logic.
+/** Bridge to the `private[sql]` entry points the engine needs:
+  * wrapping a hand-built [[LogicalPlan]] back into a public `DataFrame`
+  * (the custom whole-operator API) and merging two schemas the way
+  * Parquet schema inference does (`graft.Tables`). Lives under
+  * `org.apache.spark.sql` for package-private access; contains no logic.
   */
 object PlanBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession,
@@ -28,4 +29,11 @@ object PlanBridge {
       build: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
         org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
     classic.ExpressionUtils.column(build(cols.map(classic.ExpressionUtils.expression)))
+
+  /** `StructType.merge`: the merge Parquet schema inference applies
+    * to the footers it reads under `mergeSchema`. */
+  def mergeSchemas(a: org.apache.spark.sql.types.StructType,
+      b: org.apache.spark.sql.types.StructType,
+      caseSensitive: Boolean): org.apache.spark.sql.types.StructType =
+    a.merge(b, caseSensitive)
 }

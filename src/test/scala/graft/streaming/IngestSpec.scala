@@ -102,6 +102,28 @@ class IngestSpec extends SparkSpec {
     assert(out.map(_.cid) == Seq(7L))
   }
 
+  test("a non-numeric cid drops its frame; the stream stays up") {
+    val bad = Set(1L, 4L, 6L)
+    val batches = Seq(
+      Seq(rec(0, """J|{"c":"news","cid":"41"}""", 1000),
+          rec(1, """J|{"c":"news","cid":"abc"}""", 1000),
+          rec(2, """J|{"c":"news","cid":"42"}""", 1000),
+          rec(3, """J|{"c":"news"}""", 1000)),
+      Seq(rec(4, """L|{"c":"news","cid":"4x1"}""", 2000),
+          rec(5, """M|{"c":"news","m":"hi"}""", 2000),
+          rec(6, """M|{"c":"news","m":"lost","cid":""}""", 2000)))
+    val clean = batches.map(_.filterNot(r => bad(r.offset)))
+    val got = runPipeline(batches)
+    assert(got.nonEmpty && got.map(_.cid).toSet == Set(41L, 42L, -1L))
+    assert(got.sortBy(_.toString) == runPipeline(clean).sortBy(_.toString))
+    // a batch over a local relation too (constant-folded while optimized)
+    val local = batches.flatten.map(r =>
+      (r.key, r.value, r.topic, r.partition, r.offset, r.timestamp))
+      .toDF("key", "value", "topic", "partition", "offset", "timestamp")
+    val events = Ingest.channelEvents(Ingest.parseFrames(local))
+    assert(events.collect().map(_.cid).sorted.toSeq == Seq(-1L, -1L, 41L, 42L))
+  }
+
   test("node-originated messages are tagged for loop prevention") {
     val out = runPipeline(Seq(
       Seq(rec(0, """J|{"c":"ch","cid":"1","s":"node-1"}""")),
