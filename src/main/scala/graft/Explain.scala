@@ -1,10 +1,18 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.NamedExpression
+import org.apache.spark.sql.execution.FormattedMode
+
 /** Plan auditor: prints the formatted physical plan for the named
   * queries (or a default headline set) so scan pushdown, broadcast
   * joins, and whole-stage-codegen coverage can be inspected.
   *
+  * Digest mode builds every query in [[SparkEntry.queries]] and writes
+  * one hash of its normalized formatted plan per query as JSON, so two
+  * trees' plans can be compared query by query without reading them.
+  *
   * Usage: graft.Explain [sfDir] [queryName ...]
+  *        graft.Explain --digest sfDir out.json [plansDir]
   */
 object Explain {
   val Headline = Seq("q1_pricing_summary", "q5_region_revenue",
@@ -32,7 +40,66 @@ object Explain {
     "util_random_ids", "dedup_embedding_lsh", "sim_knn_graph",
     "status_snapshot")
 
-  def main(args: Array[String]): Unit = {
+  /** Plan text with the ids that differ between builds of one plan
+    * replaced: expression ids, exchange plan ids, lambda variable and
+    * class names, object hashes, RDD ids, UUIDs and the seed of
+    * `randstr` (drawn per build when a query gives none). */
+  private[graft] def normalize(plan: String): String =
+    plan
+      .replaceAll("#\\d+", "#x")
+      .replaceAll("plan_id=\\d+", "plan_id=x")
+      .replaceAll("Lambda(\\$\\d+)?/0x[0-9a-f]+", "Lambda")
+      .replaceAll("(lambda \\w+)_\\d+", "$1_x")
+      .replaceAll("randstr\\((\\d+), -?\\d+", "randstr($1, seed")
+      .replaceAll("@[0-9a-f]+", "@x")
+      .replaceAll("(RDD)\\[\\d+\\]", "$1[x]")
+      .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "uuid")
+
+  private def digest(plan: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(plan.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+
+  /** Writes `out`; with `plansDir`, also each normalized plan as
+    * `<query>.txt` there, to read what a changed digest changed. */
+  private def writeDigests(sfDir: String, out: String,
+      plansDir: Option[String]): Unit = {
+    val spark = Session.builder().getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    // expression ids feed hash orders in some rewrites (the Expand of
+    // RewriteDistinctAggregates), so each query starts from an id fixed
+    // by its position, above any id an earlier query used
+    val curId = {
+      val m = NamedExpression.getClass.getDeclaredMethod("curId")
+      m.setAccessible(true)
+      m.invoke(NamedExpression).asInstanceOf[java.util.concurrent.atomic.AtomicLong]
+    }
+    val sorted = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex
+    val hashes = sorted.map { case ((n, fn), i) =>
+      curId.set((i + 1L) << 32)
+      // a query that fails to build records its error class, so a build
+      // that starts or stops failing shows up as a changed digest
+      val h = try {
+        val plan = normalize(fn(spark, sfDir).queryExecution.explainString(FormattedMode))
+        plansDir.foreach(dir => java.nio.file.Files.writeString(
+          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+            .resolve(s"$n.txt"), plan))
+        digest(plan)
+      } catch { case e: Exception => s"error:${e.getClass.getName}" }
+      spark.catalog.clearCache()
+      s"  ${JsonOut.q(n)}: ${JsonOut.q(h)}"
+    }
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
+      hashes.mkString("{\n", ",\n", "\n}\n"))
+    spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = args match {
+    case Array("--digest", sfDir, out, plans @ _*) if plans.size <= 1 =>
+      writeDigests(sfDir, out, plans.headOption)
+    case _ => printPlans(args)
+  }
+
+  private def printPlans(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else Headline
     val spark = Session.builder().getOrCreate()

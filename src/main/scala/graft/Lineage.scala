@@ -16,7 +16,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * a reliable-store path (HDFS/S3/DBFS) and every truncation point
   * switches to reliable `checkpoint()` — blocks live in fault-tolerant
   * storage, executor loss is survivable. The switch is per-session and
-  * deploy-time, like `spark.sql.shuffle.partitions`.
+  * deploy-time, like `spark.sql.shuffle.partitions`: unlike a payload
+  * spread, which [[Spread]] decides from the scan's own layout, no
+  * plan can tell whether the deployment has a reliable store.
   */
 object Lineage {
 

@@ -26,15 +26,14 @@ object RoutingQueries extends QuerySuite {
     Membership.clientChannels(Tables.events(s, d))
 
   /** Message subset used by fan-out queries (keeps outputs bounded).
-    * Repartitioned before the fan-out join: the testdata is one parquet
-    * file = one input split, and the join multiplies rows ~1500× — at
-    * cluster scale the source arrives pre-partitioned, locally an
-    * explicit spread keeps the expansion parallel across all cores. */
+    * Spread before the fan-out join, which multiplies rows ~1500×:
+    * the testdata is one parquet file = one input split, and the
+    * spread keeps the expansion parallel across all cores; a source
+    * that arrives already partitioned is left as it is (Spread). */
   private def purchases(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
+    graft.Spread.fanoutScan(Tables.events(s, d)
       .filter(col("event_type") === "purchase" && col("event_id") % 2 === 0)
-      .select(col("event_id"), col("event_type").as("channel"))
-      .repartition(s.sparkContext.defaultParallelism)
+      .select(col("event_id"), col("event_type").as("channel")))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // O3/O8 — the derived membership state itself.
@@ -169,11 +168,10 @@ object RoutingQueries extends QuerySuite {
     // channel.message to the sender iff the sender is STILL subscribed.
     // Senders with cid % 3 == 0 unsubscribed before delivery -> no echo.
     "route_sender_echo" -> ((s, d) => {
-      val msgs = Tables.events(s, d)
+      val msgs = graft.Spread.fanoutScan(Tables.events(s, d)
         .filter(col("event_type") === "purchase" && col("event_id") % 2 === 0)
         .select(col("event_id"), col("event_type").as("channel"),
-          col("user_id").as("cid"))
-        .repartition(s.sparkContext.defaultParallelism)
+          col("user_id").as("cid")))
       val remaining = cc(s, d).filter(col("cid") % 3 =!= 0)
       Router.senderEcho(msgs, remaining)
         .orderBy("event_id", "cid")
@@ -203,13 +201,12 @@ object RoutingQueries extends QuerySuite {
     // hash match proves the round-trip is lossless.
     "route_frame_roundtrip" -> ((s, d) => {
       val w = Window.partitionBy(col("event_type")).orderBy(col("event_id"))
-      val framed = Tables.events(s, d)
-        .withColumn("seqno", row_number().over(w) % 100)
-        // The seqno window is inherently per-channel sequential (5
-        // partitions here), but the expensive JSON serde is
-        // embarrassingly parallel — spread it across all cores rather
-        // than inheriting the window's channel-count parallelism.
-        .repartition(s.sparkContext.defaultParallelism)
+      // The seqno window is inherently per-channel sequential (5
+      // partitions here), but the expensive JSON serde is
+      // embarrassingly parallel — spread it across all cores rather
+      // than inheriting the window's channel-count parallelism.
+      val framed = graft.Spread.fanout(Tables.events(s, d)
+          .withColumn("seqno", row_number().over(w) % 100))
         .select(col("event_id"),
           Frames.serializeFrame(
             lit("M"), col("event_type"), col("props"),
@@ -234,8 +231,7 @@ object RoutingQueries extends QuerySuite {
     // admits; per-value semantics are spec'd in RandomStringSpec
     // (seeded determinism, alphabet, abs-length quirk).
     "util_random_ids" -> ((s, d) => {
-      Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      graft.Spread.fanoutScan(Tables.documents(s, d))
         .select(col("doc_id"),
           graft.functions.RandomId.randomString().as("rid"))
         .agg(

@@ -169,32 +169,28 @@ object BpeQueries extends QuerySuite {
     * round loop. */
   val LocalTypeCap = 4 * 1000 * 1000
 
-  /** Merge tables are deterministic pure functions of (corpus dir,
-    * budget) — memoized so text_bpe_encode reuses text_bpe_vocab's
-    * training from the same process (driver/bench run both). */
-  private val trained =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[Merge]]()
-  private def trainedMerges(s: SparkSession, d: String): Seq[Merge] =
-    trained.computeIfAbsent((d, MergeBudget), { _ =>
-      import s.implicits._
-      // distributed corpus-scale counting pass either way; the merge
-      // loop runs locally iff the TYPE table (an aggregate) is small.
-      // Count first — no sort (order is irrelevant to the local
-      // trainer), and the fallback path never collects rows it would
-      // throw away.
-      val counts = Tables.documents(s, d)
-        .select(explode(words(lower(col("text")))).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("freq"))
-        .as[(String, Long)]
-      if (counts.count() <= LocalTypeCap)
-        trainMergesLocal(counts.collect().toSeq, MergeBudget)
-      else
-        // reuse the type table just counted — re-calling wordTypes
-        // here would re-run the corpus-scale explode+groupBy exactly
-        // on the path taken when the corpus is huge
-        trainMerges(counts.map { case (w, f) => WordSeq(w, f, initSyms(w)) },
-          MergeBudget)
-    })
+  /** The merge table of the corpus; each query trains for itself,
+    * since training is part of its cost. */
+  private def trainedMerges(s: SparkSession, d: String): Seq[Merge] = {
+    import s.implicits._
+    // distributed corpus-scale counting pass either way; the merge
+    // loop runs locally iff the TYPE table (an aggregate) is small.
+    // Count first — no sort (order is irrelevant to the local
+    // trainer), and the fallback path never collects rows it would
+    // throw away.
+    val counts = Tables.documents(s, d)
+      .select(explode(words(lower(col("text")))).as("word"))
+      .groupBy("word").agg(count(lit(1)).as("freq"))
+      .as[(String, Long)]
+    if (counts.count() <= LocalTypeCap)
+      trainMergesLocal(counts.collect().toSeq, MergeBudget)
+    else
+      // reuse the type table just counted — re-calling wordTypes
+      // here would re-run the corpus-scale explode+groupBy exactly
+      // on the path taken when the corpus is huge
+      trainMerges(counts.map { case (w, f) => WordSeq(w, f, initSyms(w)) },
+        MergeBudget)
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The learned merge table: rank, pair, merged symbol, weighted

@@ -60,9 +60,8 @@ object ClusterQueries extends QuerySuite {
     * stride-sampled initCents collect would NPE the driver on
     * getSeq (the NULL-content corpus sweep caught exactly this). */
   private def qCorpus(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .filter(col("embedding").isNotNull)
-      .repartition(s.sparkContext.defaultParallelism)
+    graft.Spread.fanoutScan(Tables.embeddings(s, d)
+        .filter(col("embedding").isNotNull))
       .select(col("vec_id"), quantize(col("embedding")).as("qv"))
 
   /** Squared L2 between the integer vector `qv` and a double centroid:
@@ -152,13 +151,9 @@ object ClusterQueries extends QuerySuite {
     all.result()
   }
 
-  /** Training is a deterministic pure function of the corpus dir —
-    * memoized as plain data (never DataFrames: those would pin a
-    * session) so the two queries share one training per process. */
-  private val trained = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[Seq[(Int, Array[Double])]]]()
+  /** Each query trains for itself: training is part of its cost. */
   private def centsRounds(s: SparkSession, d: String): Seq[Seq[(Int, Array[Double])]] =
-    trained.computeIfAbsent(d, _ => centsRoundsOn(qCorpus(s, d)))
+    centsRoundsOn(qCorpus(s, d))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Final-round cluster census: per surviving cluster the member
@@ -227,8 +222,7 @@ object ClusterQueries extends QuerySuite {
       graft.plans.FloatVectorDot.register(s)
       graft.plans.NearestCentroidL2.register(s)
       val cs = centsRounds(s, d)
-      val e = Tables.embeddings(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("qv", quantize(col("embedding")))
         .withColumn("cluster", assignExpr(cs.last))
         .withColumn("nrm", Vectors.normNative(col("embedding")))
@@ -260,8 +254,7 @@ object ClusterQueries extends QuerySuite {
       graft.plans.FloatVectorDot.register(s)
       graft.plans.NearestCentroidL2.register(s)
       val cs = centsRounds(s, d)
-      val assigned = Tables.embeddings(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val assigned = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("qv", quantize(col("embedding")))
         .withColumn("cluster", assignExpr(cs.last))
         .withColumn("nrm", Vectors.normNative(col("embedding")))
@@ -300,8 +293,7 @@ object ClusterQueries extends QuerySuite {
       val trainedCounts = assign(qCorpus(s, d), cs.last)
         .filter(col("cluster").isNotNull)
         .groupBy("cluster").agg(count(lit(1)).as("n"))
-      val e = Tables.embeddings(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("nrm", Vectors.normNative(col("embedding")))
         .filter(col("nrm") > 0)
       val centArr = e

@@ -57,16 +57,16 @@ object DedupQueries extends QuerySuite {
     * the dropped mass is surfaced by `dedup_jaccard_posting_stats`. */
   val MaxPosting = 64
 
-  /** Documents spread across all cores: the table is one parquet split
-    * and every downstream op here does heavy per-row array/hash work,
-    * so parallelism, not data size, is the constraint locally. Also
+  /** Documents spread across all cores while the scan arrives in fewer
+    * partitions than cores (one parquet split locally): every
+    * downstream op here does heavy per-row array/hash work, so
+    * parallelism, not data size, is the constraint. Also
     * registers the native text kernels the dedup family uses. */
   private def withWordsFrame(s: SparkSession, docs: DataFrame): DataFrame = {
     graft.plans.NGramShingles.register(s)
     graft.plans.MinHashSig.register(s)
     graft.plans.SimHash64.register(s)
-    docs
-      .repartition(s.sparkContext.defaultParallelism)
+    graft.Spread.fanoutScan(docs)
       .withColumn("w", words(col("text")))
       .filter(size(col("w")) >= Shingle)
   }
@@ -931,8 +931,7 @@ object DedupQueries extends QuerySuite {
       // two of them share every SRP band (all dots 0) and the verify
       // divides by nrm_a*nrm_b = 0 — ANSI abort in Spark while
       // DuckDB's NaN compares >= threshold and emits phantom pairs
-      val e = Tables.embeddings(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("nrm", Vectors.normNative(col("embedding")))
         .filter(col("nrm") > 0.0)
       srpPairs(e, dim = 64, threshold = 0.4)
@@ -953,8 +952,7 @@ object DedupQueries extends QuerySuite {
     // embedding path.
     "dedup_srp_bucket_stats" -> ((s, d) => {
       graft.plans.FloatVectorDot.register(s)
-      val e = Tables.embeddings(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("nrm", Vectors.normNative(col("embedding")))
         .filter(col("nrm") > 0.0)
       srpBands(e, dim = 64)
@@ -979,8 +977,7 @@ object DedupQueries extends QuerySuite {
       // norms precomputed once per vector (not once per pair) — same
       // deterministic fold, O(n) instead of O(pairs) norm work.
       graft.plans.FloatVectorDot.register(s)
-      val e = Tables.embeddings(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("nrm", Vectors.normNative(col("embedding")))
         // zero-norm exclusion: cosine against the zero vector is
         // 0/0 — ANSI abort vs DuckDB NaN (the sim_* convention)
@@ -1019,8 +1016,7 @@ object DedupQueries extends QuerySuite {
       // ordering (the kernel returns NULL cluster, DuckDB's row_number
       // sorts NaN as largest) — a degenerate vector must not reach
       // either assignment path.
-      val e = Tables.embeddings(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("nrm", Vectors.normNative(col("embedding")))
         .filter(col("nrm") > 0)
       val centArr = e.filter(col("vec_id") % SemStride === 0)
@@ -1115,8 +1111,7 @@ object DedupQueries extends QuerySuite {
     * dedup recall is dying — page on it. */
   private[graft] def srpKeptMass(s: SparkSession, d: String): DataFrame = {
     graft.plans.FloatVectorDot.register(s)
-    val e = Tables.embeddings(s, d)
-      .repartition(s.sparkContext.defaultParallelism)
+    val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
       .withColumn("nrm", graft.llm.Vectors.normNative(col("embedding")))
       .filter(col("nrm") > 0.0)
     srpBands(e, dim = 64)

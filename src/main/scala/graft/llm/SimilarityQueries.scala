@@ -76,12 +76,11 @@ object SimilarityQueries extends QuerySuite {
   val PqK = 16
   val PqStride = 29
 
-  /** Corpus with per-vector norm, spread across cores (single-split
-    * local file; at scale the source is already partitioned). */
+  /** Corpus with per-vector norm, spread across cores while the scan
+    * arrives in fewer partitions than cores (Spread.fanoutScan). */
   private def corpus(s: SparkSession, d: String): DataFrame = {
     graft.plans.FloatVectorDot.register(s)
-    Tables.embeddings(s, d)
-      .repartition(s.sparkContext.defaultParallelism)
+    graft.Spread.fanoutScan(Tables.embeddings(s, d))
       .withColumn("nrm", Vectors.normNative(col("embedding")))
   }
 
@@ -169,8 +168,7 @@ object SimilarityQueries extends QuerySuite {
     // vectors).
     "sim_knn_graph" -> ((s, d) => {
       graft.plans.FloatVectorDot.register(s)
-      val e = Tables.embeddings(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
+      val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("nrm", Vectors.normNative(col("embedding")))
         .filter(col("nrm") > 0) // cos undefined on zero vectors
       // hot-bucket-capped bands (round-13: this duplicated the
@@ -924,8 +922,7 @@ object SimilarityQueries extends QuerySuite {
     * interpreted closure per centroid, spec-pinned bit-identical). */
   private def pqAssigned(s: SparkSession, d: String): DataFrame = {
     graft.plans.PqAssign.register(s)
-    Tables.embeddings(s, d)
-      .repartition(s.sparkContext.defaultParallelism)
+    graft.Spread.fanoutScan(Tables.embeddings(s, d))
       .crossJoin(broadcast(pqCodebook(s, d)))
       .withColumn("best",
         call_function(graft.plans.PqAssign.Name,
@@ -938,8 +935,7 @@ object SimilarityQueries extends QuerySuite {
 
   /** pqAssigned's HOF form, for the kernel-equivalence spec. */
   private[llm] def pqAssignedHof(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .repartition(s.sparkContext.defaultParallelism)
+    graft.Spread.fanoutScan(Tables.embeddings(s, d))
       .crossJoin(broadcast(pqCodebook(s, d)))
       .withColumn("subs", pqSubs)
       .withColumn("best", pqBestHof)
