@@ -43,7 +43,9 @@ object Explain {
   /** Plan text with the ids that differ between builds of one plan
     * replaced: expression ids, exchange plan ids, lambda variable and
     * class names, object hashes, RDD ids, UUIDs and the seed of
-    * `randstr` (drawn per build when a query gives none). */
+    * `randstr` (drawn per build when a query gives none); and the source
+    * line of the call that created a scanned RDD (`localCheckpoint at
+    * Lineage.scala:<line>`), which moves with every edit above it. */
   private[graft] def normalize(plan: String): String =
     plan
       .replaceAll("#\\d+", "#x")
@@ -53,6 +55,7 @@ object Explain {
       .replaceAll("randstr\\((\\d+), -?\\d+", "randstr($1, seed")
       .replaceAll("@[0-9a-f]+", "@x")
       .replaceAll("(RDD)\\[\\d+\\]", "$1[x]")
+      .replaceAll("(\\w+\\.scala):\\d+", "$1:x")
       .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "uuid")
 
   private def digest(plan: String): String =

@@ -1,7 +1,7 @@
 package graft.analytics
 
-import graft.Lineage.LineageOps
-import graft.{QuerySuite, Tables}
+import graft.Lineage.{Cap, Cut, Lazy, LineageOps, Radius}
+import graft.{Lineage, QuerySuite, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,11 +41,10 @@ object GraphQueries extends QuerySuite {
 
   /** The k-core peel loop on a SYMMETRIC (a, b) edge list: iterate
     * "drop nodes of induced degree < k" to fixpoint, loud failure
-    * past `maxRounds` (the CC/BFS non-convergence precedent — the
-    * oracle replays exactly that many rounds, so stopping early
-    * silently would diverge from it). Monotonicity makes the
-    * count-only fixpoint test sound: node sets only shrink, so an
-    * unchanged count proves an unchanged set. Returns (node,
+    * past `maxRounds` (the oracle replays exactly that many rounds, so
+    * stopping early silently would diverge from it). Monotonicity
+    * makes the count-only fixpoint test sound: node sets only shrink,
+    * so an unchanged count proves an unchanged set. Returns (node,
     * core_deg) of the surviving core. Factored out of the query so
     * KCorePeelSpec can drive it with planted graphs, including the
     * deep-path case that must THROW. */
@@ -55,28 +54,63 @@ object GraphQueries extends QuerySuite {
       .join(nodes.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
       .join(nodes.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
       .groupBy(col("a").as("node")).agg(count(lit(1)).as("dg"))
-    var nodes = sym.groupBy(col("a").as("node"))
+    val init = sym.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("dg"))
       .filter(col("dg") >= k).select("node")
       .truncateLineage(true)
-    var size = nodes.count()
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      round += 1
-      val next = induced(nodes).filter(col("dg") >= k)
-        .select("node").truncateLineage(true)
+    var size = init.count()
+    val nodes = Lineage.iterate("graph_kcore", "k-core peel", Cut,
+        Cap(maxRounds), init) { r =>
+      val next = induced(r.prev).filter(col("dg") >= k)
+        .select("node").transform(r.materialize)
       val m = next.count()
-      if (m == size) converged = true
-      nodes = next
+      val fixed = m == size
       size = m
+      fixed
     }
-    if (!converged) throw new IllegalStateException(
-      s"graph_kcore: peeling still live after $maxRounds rounds " +
-        "— raise MaxPeelRounds (and the oracle's replay depth) " +
-        "deliberately rather than silently truncating the peel")
     induced(nodes).select(col("node"), col("dg").as("core_deg"))
   }
+
+  /** (node, dist): BFS hop distance from the smallest node id of a
+    * SYMMETRIC (a, b) edge list. Level-synchronous frontier expansion:
+    * each round is one keyed join of the frontier against the edge
+    * list and an anti-join against the settled nodes; every shuffle
+    * keys on the node id. Rounds are bounded by the graph DIAMETER,
+    * never by node count, and past `maxRounds` the loop fails loudly
+    * rather than silently truncating distances. The settled result is
+    * the union of every round's frame, so the rounds are [[Lazy]]; the
+    * frontier and the settled union are cut every 4th round. Between
+    * cuts the planning time grows ~2.4× per round (each round's plan
+    * holds the settled union before it): a 40-node path reaches a cap
+    * of 30 in 14 s with a cut every 4th round, 154 s with one every
+    * 8th (local[2], 4-vCPU VM). The co-supply graphs settle in 3
+    * rounds. Factored out of graph_bfs_depth so BfsLevelsSpec can
+    * drive the cap. */
+  private[analytics] def bfsLevels(sym: DataFrame,
+      maxRounds: Int): DataFrame = {
+    val src = sym.agg(min("a").as("node"))
+      .withColumn("dist", lit(0L))
+    var settled = src.truncateLineage(true)
+    Lineage.iterate("graph_bfs_depth", "BFS frontier", Lazy(4),
+        Cap(maxRounds), settled) { r =>
+      val next = r.prev.select(col("node").as("a"))
+        .join(sym, "a").select(col("b").as("node")).distinct()
+        .join(settled, Seq("node"), "left_anti")
+        .withColumn("dist", lit(r.index.toLong))
+        .transform(r.materialize)
+      val empty = next.isEmpty
+      if (!empty) settled = r.carry(settled.union(next))
+      empty
+    }
+    settled
+  }
+
+  /** Both directions of each co-supply edge (u, v) as (a, b). No
+    * distinct: [[coSupplyEdges]] emits each pair once with u < v
+    * strictly, so the two union legs cannot collide. */
+  private def symmetric(e0: DataFrame): DataFrame =
+    e0.select(col("u").as("a"), col("v").as("b"))
+      .union(e0.select(col("v").as("a"), col("u").as("b")))
 
   /** Supplier node ids live above customers: dst = SuppBase + suppkey.
     * 2^40 keeps the ranges disjoint to ~10^12 customers (TPC-H mints
@@ -161,9 +195,7 @@ object GraphQueries extends QuerySuite {
     * edge⋈deg, one scalar aggregate. */
   private def assortativity(s: SparkSession, d: String,
       decimalMoments: Boolean): DataFrame = {
-    val e0 = coSupplyEdges(s, d)
-    val sym = e0.select(col("u").as("a"), col("v").as("b"))
-      .union(e0.select(col("v").as("a"), col("u").as("b")))
+    val sym = symmetric(coSupplyEdges(s, d))
     val deg = sym.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("dg"))
     def x(c: Column): Column =
@@ -441,11 +473,18 @@ object GraphQueries extends QuerySuite {
     // one O(partitions) count over the checkpointed node table
     // decides the per-round ship strategy (see BroadcastNodeBudget)
     val bcast = !forceShuffle && deg.count() <= BroadcastNodeBudget
+    pagerankTop20(e, deg, bcast, "mass div out_deg")
+  }
+
+  /** [[Rounds]] damped rounds from [[InitMass]] per node, then the 20
+    * nodes of most mass. Top-k FIRST (TakeOrderedAndProject —
+    * per-partition heads, no node-sized single-partition window), then
+    * rank the 20 survivors; the residual unpartitioned window is 20
+    * rows. */
+  private def pagerankTop20(e: DataFrame, deg: DataFrame, bcast: Boolean,
+      contribution: String): DataFrame = {
     var mass = deg.select(col("node"), lit(InitMass).as("mass"))
-    for (_ <- 1 to Rounds) mass = step(e, deg, mass, bcast)
-    // top-k FIRST (TakeOrderedAndProject — per-partition heads, no
-    // node-sized single-partition window), then rank the 20
-    // survivors; the residual unpartitioned window is 20 rows
+    for (_ <- 1 to Rounds) mass = step(e, deg, mass, bcast, contribution)
     mass.orderBy(col("mass").desc, col("node")).limit(20)
       .withColumn("kind",
         when(col("node") < SuppBase, "customer").otherwise("supplier"))
@@ -455,11 +494,18 @@ object GraphQueries extends QuerySuite {
       .orderBy("rk")
   }
 
-  /** One damped round: mass_r+1 = base + (85·incoming) div 100.
-    * `bcast` picks the mass⋈deg ship strategy (see class doc);
-    * `private[graft]` so GraphPlanSpec can assert both plan shapes. */
+  /** One damped round: mass_r+1 = base + (85·incoming) div 100, where
+    * `contribution` is the per-edge share of the source's mass:
+    * `mass div out_deg`, or `(mass * w) div w_src` on the weighted
+    * edges. Weighted headroom: mass·w must stay inside BIGINT — with
+    * total mass N·InitMass this bounds w_max·N·10^9 < 2^63, i.e. edge
+    * weights to ~10^5 at 10^5 nodes; heavier graphs scale InitMass
+    * down, as the unweighted contract documents. `bcast` picks the
+    * mass⋈deg ship strategy (see class doc); `private[graft]` so
+    * GraphPlanSpec can assert both plan shapes. */
   private[graft] def step(e: DataFrame, deg: DataFrame, mass: DataFrame,
-      bcast: Boolean = true): DataFrame = {
+      bcast: Boolean = true,
+      contribution: String = "mass div out_deg"): DataFrame = {
     val base = (15L * InitMass) / 100L
     val md0 = mass.join(deg, "node")
     // Degraded (past-budget) path: materialize the node-sized mass⋈deg
@@ -473,7 +519,7 @@ object GraphQueries extends QuerySuite {
     // broadcast path needs neither: no exchange exists to straggle.
     val md = if (bcast) broadcast(md0) else md0.truncateLineage()
     val contrib = e.join(md, col("src") === col("node"))
-      .select(col("dst"), expr("mass div out_deg").as("c"))
+      .select(col("dst"), expr(contribution).as("c"))
       .groupBy(col("dst").as("node")).agg(sum("c").as("in_mass"))
     deg.select("node").join(contrib, Seq("node"), "left")
       .select(col("node"),
@@ -493,26 +539,6 @@ object GraphQueries extends QuerySuite {
       .agg(count(lit(1)).as("w"))
     fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"), col("w")))
       .truncateLineage()
-  }
-
-  /** One damped weighted round: per-edge contribution
-    * `(mass·w) div W_src`. Integer headroom: mass·w must stay inside
-    * BIGINT — with total mass N·InitMass this bounds w_max·N·10^9 <
-    * 2^63, i.e. edge weights to ~10^5 at 10^5 nodes; heavier graphs
-    * scale InitMass down, as the unweighted contract documents. */
-  private[graft] def stepWeighted(e: DataFrame, deg: DataFrame,
-      mass: DataFrame, bcast: Boolean = true): DataFrame = {
-    val base = (15L * InitMass) / 100L
-    val md0 = mass.join(deg, "node")
-    // same degraded-path checkpoint + skew-split enablement as step()
-    val md = if (bcast) broadcast(md0) else md0.truncateLineage()
-    val contrib = e.join(md, col("src") === col("node"))
-      .select(col("dst"), expr("(mass * w) div w_src").as("c"))
-      .groupBy(col("dst").as("node")).agg(sum("c").as("in_mass"))
-    deg.select("node").join(contrib, Seq("node"), "left")
-      .select(col("node"),
-        (lit(base) + expr(s"($Damping * coalesce(in_mass, 0L)) div 100"))
-          .as("mass"))
   }
 
   /** Basket cap for the supplier co-occurrence projection: an order
@@ -646,59 +672,13 @@ object GraphQueries extends QuerySuite {
     // one groupBy on degree — bounded by the node count, never edges.
     // BFS hop distance over the strong co-supply graph from the
     // smallest node id — the reachability/diameter probe run before
-    // any path-dependent analysis. Level-synchronous frontier
-    // expansion: each round is one keyed join of the (shrinking)
-    // frontier against the checkpointed symmetric edge list, an
-    // anti-join against settled nodes, and one localCheckpoint — the
-    // CC loop's one-action-per-round discipline. Rounds are bounded by
-    // the graph DIAMETER (loud failure past [[MaxBfsRounds]], the CC
-    // non-convergence precedent), never by node count; every shuffle
-    // keys on the node id. The oracle replays the same levels as a
-    // recursive CTE taking min(dist) per node.
-    "graph_bfs_depth" -> ((s, d) => {
-      val e0 = coSupplyEdges(s, d)
-      // no distinct: coSupplyEdges emits each pair once with u < v
-      // strictly, so the two union legs cannot collide
-      val sym = e0.select(col("u").as("a"), col("v").as("b"))
-        .union(e0.select(col("v").as("a"), col("u").as("b")))
-        .truncateLineage(true) // read every round — truncate lineage once
-      val src = sym.agg(min("a").as("node"))
-        .withColumn("dist", lit(0L))
-      var settled = src.truncateLineage(true)
-      var frontier = settled
-      var round = 0
-      var converged = false
-      while (!converged && round < MaxBfsRounds) {
-        round += 1
-        // One scheduled job per round (VERDICT r15 item 6): the round
-        // frame is persisted LAZILY — isEmpty materializes at most one
-        // partition and the next round's frontier join fills the rest
-        // inside its own job — where the eager per-round
-        // localCheckpoint paid a dedicated materialization job, plus a
-        // second full rewrite of the ever-growing settled union.
-        // settled stays a lazy union of the per-round cached frames
-        // (its legs are already materialized). Lineage still truncates
-        // every 8th round so plan depth stays bounded on pathological
-        // diameters.
-        val grown = frontier.select(col("node").as("a"))
-          .join(sym, "a").select(col("b").as("node")).distinct()
-          .join(settled, Seq("node"), "left_anti")
-          .withColumn("dist", lit(round.toLong))
-        val next =
-          if (round % 8 == 0) grown.truncateLineage(true)
-          else grown.persist()
-        if (next.isEmpty) converged = true
-        else {
-          settled = settled.union(next)
-          frontier = next
-        }
-      }
-      if (!converged) throw new IllegalStateException(
-        s"graph_bfs_depth: frontier still live after $MaxBfsRounds " +
-          "rounds — diameter exceeds the bound; raise MaxBfsRounds " +
-          "deliberately rather than silently truncating distances")
-      settled.orderBy("node")
-    }),
+    // any path-dependent analysis. Body in [[bfsLevels]]. The oracle
+    // replays the same levels as a recursive CTE taking min(dist) per
+    // node.
+    "graph_bfs_depth" -> ((s, d) =>
+      bfsLevels(symmetric(coSupplyEdges(s, d))
+        .truncateLineage(true), // read every round — truncate lineage once
+        MaxBfsRounds).orderBy("node")),
 
     // Sampled closeness + harmonic centrality over the strong
     // co-supply graph — the "which suppliers sit nearest the middle of
@@ -707,9 +687,8 @@ object GraphQueries extends QuerySuite {
     // Pich, ESA'07 lineage) and bounded-radius BFS, never all-pairs.
     // Multi-source level-synchronous expansion: the frontier carries
     // (seed, node) so ONE join per round advances every seed at once;
-    // each round is frontier⋈edges + anti-join against settled +
-    // localCheckpoint — graph_bfs_depth's one-action-per-round
-    // discipline, with the settled table bounded at Seeds·V rows.
+    // each round is frontier⋈edges + anti-join against settled, with
+    // the settled table bounded at Seeds·V rows.
     // Distances are truncated at [[ClosenessRadius]] hops BY
     // DEFINITION (the oracle replays the same bound — truncation is
     // the semantics, so no loud-fail here, unlike the full-BFS probe).
@@ -717,11 +696,7 @@ object GraphQueries extends QuerySuite {
     // (60/d exact for d ≤ 6) are BIGINT aggregates; closeness and
     // harmonic are two final IEEE divisions.
     "graph_closeness_panel" -> ((s, d) => {
-      val e0 = coSupplyEdges(s, d)
-      // no distinct: coSupplyEdges emits each pair once with u < v
-      // strictly, so the two union legs cannot collide
-      val sym = e0.select(col("u").as("a"), col("v").as("b"))
-        .union(e0.select(col("v").as("a"), col("u").as("b")))
+      val sym = symmetric(coSupplyEdges(s, d))
         .truncateLineage(true) // read every round — truncate lineage once
       // panel = the ClosenessSeeds smallest node ids present in the
       // graph: deterministic and non-empty at every sf (a modulus
@@ -731,27 +706,20 @@ object GraphQueries extends QuerySuite {
         .orderBy("node").limit(ClosenessSeeds)
       var settled = seeds.select(col("node").as("seed"), col("node"),
         lit(0L).as("dist")).truncateLineage(true)
-      var frontier = settled
-      var round = 0
-      var live = true
-      while (live && round < ClosenessRadius) {
-        round += 1
-        // lazy persist + lazy settled union — graph_bfs_depth's
-        // one-job-per-round discipline (VERDICT r15 item 6); the
-        // radius bound is a small constant, so no periodic truncation
-        // is needed to keep plan depth in check
-        val next = frontier.select(col("seed"), col("node").as("a"))
+      // the radius is a small constant: no cut needed to bound the
+      // plan depth
+      Lineage.iterate("graph_closeness_panel", "BFS frontier", Lazy(),
+          Radius(ClosenessRadius), settled) { r =>
+        val next = r.prev.select(col("seed"), col("node").as("a"))
           .join(sym, "a")
           .select(col("seed"), col("b").as("node")).distinct()
           .join(settled.select("seed", "node"), Seq("seed", "node"),
             "left_anti")
-          .withColumn("dist", lit(round.toLong))
-          .persist()
-        if (next.isEmpty) live = false
-        else {
-          settled = settled.union(next)
-          frontier = next
-        }
+          .withColumn("dist", lit(r.index.toLong))
+          .transform(r.materialize)
+        val empty = next.isEmpty
+        if (!empty) settled = settled.union(next)
+        empty
       }
       settled.groupBy("seed").agg(
           count(lit(1)).as("n_reached"),
@@ -783,17 +751,18 @@ object GraphQueries extends QuerySuite {
     // the settled/level tables are bounded at Seeds·V rows; the final
     // ranking is a top-K on the node-sized aggregate.
     "graph_betweenness_panel" -> ((s, d) => {
-      val e0 = coSupplyEdges(s, d)
-      val sym = e0.select(col("u").as("a"), col("v").as("b"))
-        .union(e0.select(col("v").as("a"), col("u").as("b")))
+      val sym = symmetric(coSupplyEdges(s, d))
         .truncateLineage(true) // read 2·radius times — truncate once
       val seeds = sym.select(col("a").as("node")).distinct()
         .orderBy("node").limit(BetwSeeds)
-      var level = seeds.select(col("node").as("seed"), col("node"),
+      val level0 = seeds.select(col("node").as("seed"), col("node"),
         lit(1L).as("sigma")).truncateLineage(true)
-      val levels = scala.collection.mutable.ArrayBuffer(level)
-      var settled = level.select("seed", "node").truncateLineage(true)
-      for (r <- 1 to BetwRadius) {
+      val levels = scala.collection.mutable.ArrayBuffer(level0)
+      var settled = level0.select("seed", "node").truncateLineage(true)
+      // each level is read again by the settled anti-joins and twice by
+      // the backward pass
+      Lineage.iterate("graph_betweenness_panel", "forward BFS", Lazy(),
+          Radius(BetwRadius), level0) { r =>
         // forward headroom guard: σ(w) = Σ σ(v) over ≤ in_deg
         // predecessors, each proven < ceiling by the PREVIOUS round's
         // guard (round 0 is the literal 1), so in_deg·σmax_prev —
@@ -801,7 +770,7 @@ object GraphQueries extends QuerySuite {
         // bounds this round's sum a-priori. Without this the backward
         // pass would read possibly-wrapped σ and its own bounds would
         // be computed FROM corrupt inputs.
-        val next = level.join(sym, col("node") === col("a"))
+        val next = r.prev.join(sym, col("node") === col("a"))
           .select(col("seed"), col("b").as("nxt"), col("sigma"))
           .join(settled.select(col("seed"), col("node").as("nxt")),
             Seq("seed", "nxt"), "left_anti")
@@ -813,21 +782,12 @@ object GraphQueries extends QuerySuite {
               "in_deg*sigma_max (forward round)",
               col("in_deg").cast("double") * col("ms").cast("double"))(
               col("sg")).as("sigma"))
-          // lazy persist: each level is read again by the settled
-          // anti-joins and twice by the backward pass — the cache
-          // fills inside the first consumer's job instead of a
-          // dedicated per-round checkpoint job (VERDICT r15 item 6);
-          // with the fixed BetwRadius bound the whole forward+backward
-          // DAG now runs as one scheduled query
-          .persist()
+          .transform(r.materialize)
         levels += next
-        // only the NEXT round's anti-join reads settled — a LAZY union
-        // of the per-round cached frames (its legs are materialized;
-        // re-checkpointing the whole union each round was O(settled)
-        // extra IO)
-        if (r < BetwRadius)
+        // only the NEXT round's anti-join reads settled
+        if (r.index < BetwRadius)
           settled = settled.union(next.select("seed", "node"))
-        level = next
+        false
       }
       // backward: δ at the deepest level is 0 (no successors inside
       // the radius); seeds (level 0) need no δ — betweenness sums δ
@@ -906,14 +866,10 @@ object GraphQueries extends QuerySuite {
     // [[MaxPeelRounds]] rounds; once the fixpoint is reached the
     // extra rounds are identities, so Spark loud-fails if it hasn't
     // converged inside the bound rather than silently diverging.
-    "graph_kcore" -> ((s, d) => {
-      val e0 = coSupplyEdges(s, d)
-      val sym = e0.select(col("u").as("a"), col("v").as("b"))
-        .union(e0.select(col("v").as("a"), col("u").as("b")))
-        .truncateLineage(true) // read every round — truncate lineage once
-      kcorePeel(sym, KCoreK, MaxPeelRounds)
-        .orderBy("node")
-    }),
+    "graph_kcore" -> ((s, d) =>
+      kcorePeel(symmetric(coSupplyEdges(s, d))
+        .truncateLineage(true), // read every round — truncate lineage once
+        KCoreK, MaxPeelRounds).orderBy("node")),
 
     // Degree assortativity (Newman PRL'02) of the strong co-supply
     // graph: the Pearson correlation of endpoint degrees over edges.
@@ -1183,15 +1139,7 @@ object GraphQueries extends QuerySuite {
         .agg(sum("w").as("w_src"))
         .truncateLineage()
       val bcast = deg.count() <= BroadcastNodeBudget
-      var mass = deg.select(col("node"), lit(InitMass).as("mass"))
-      for (_ <- 1 to Rounds) mass = stepWeighted(e, deg, mass, bcast)
-      mass.orderBy(col("mass").desc, col("node")).limit(20)
-        .withColumn("kind",
-          when(col("node") < SuppBase, "customer").otherwise("supplier"))
-        .withColumn("rk", row_number().over(
-          Window.orderBy(col("mass").desc, col("node"))).cast("long"))
-        .select("rk", "node", "kind", "mass")
-        .orderBy("rk")
+      pagerankTop20(e, deg, bcast, "(mass * w) div w_src")
     }))
 
   def oracles: Map[String, String] = Map(

@@ -1,7 +1,7 @@
 package graft.llm
 
-import graft.Lineage.LineageOps
-import graft.{QuerySuite, Tables}
+import graft.Lineage.{Cap, Cut, LineageOps}
+import graft.{Lineage, QuerySuite, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -437,41 +437,38 @@ object DedupQueries extends QuerySuite {
     * path halving); rounds needed = O(log diameter), so even a
     * pathological chain-shaped component converges in a handful of
     * rounds — spec-pinned on a 300-node path. The driver loop holds
-    * only a convergence COUNT, never data.
+    * only a convergence COUNT, never data. `query` names the caller in
+    * the round-cap failure: with path halving the cap admits diameters
+    * ~2^maxRounds, so hitting it means the edge set itself is
+    * pathological, not the algorithm.
     */
-  private[llm] def connectedComponents(nodes: DataFrame, edges: DataFrame,
-      maxRounds: Int = 50): DataFrame = {
+  private[llm] def connectedComponents(query: String, nodes: DataFrame,
+      edges: DataFrame, maxRounds: Int = 50): DataFrame = {
     val sym = edges.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(edges.select(col("doc_b").as("u"), col("doc_a").as("v")))
       .persist()
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("comp")).persist()
-    var changed = 1L
+    val init = nodes.select(col("doc_id"), col("doc_id").as("comp")).persist()
     // coalesce: sum over ZERO nodes is NULL and getLong would NPE —
     // an empty pair set (no near-dups found, or an empty corpus) must
     // yield an empty component list like the recursive-CTE oracle,
     // not a crash
-    var lastSum = labels.agg(coalesce(sum("comp"), lit(0L)))
-      .head().getLong(0)
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
+    def labelSum(labels: DataFrame): Long =
+      labels.agg(coalesce(sum("comp"), lit(0L))).head().getLong(0)
+    var lastSum = labelSum(init)
+    Lineage.iterate(query, "connected components", Cut, Cap(maxRounds),
+        init, sym) { r =>
       val viaNeighbor = sym
-        .join(labels.select(col("doc_id").as("v"), col("comp")), "v")
+        .join(r.prev.select(col("doc_id").as("v"), col("comp")), "v")
         .groupBy(col("u").as("doc_id"))
         .agg(min("comp").as("neighbor_comp"))
-      // persist (lazy, not an eager checkpoint): the frame below is
-      // referenced twice by the halving join, so without caching the
-      // round's head the halving join would recompute it per side AND
-      // the analyzer's plan tree would double per round. The eager
-      // materialization happens ONCE per round, at `next`'s
-      // localCheckpoint below — one scheduled action per round instead
-      // of the previous two (checkpoint propagated, then action next),
-      // which halves the fixed per-round scheduling cost that
-      // dominates when the near-dup graph is small.
-      val propagated = labels
+      // persisted: the frame below is referenced twice by the halving
+      // join, so without caching the halving join would recompute it
+      // per side AND the analyzer's plan tree would double per round
+      val propagated = r.prev
         .join(viaNeighbor, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("comp"), coalesce(col("neighbor_comp"), col("comp"))).as("comp"))
-        .persist()
+        .transform(r.persist)
       // Path halving (pointer jumping): also adopt the label OF my
       // label. Neighbor-min alone walks one hop per round (rounds =
       // component diameter); the extra self-join doubles the chased
@@ -479,48 +476,22 @@ object DedupQueries extends QuerySuite {
       // difference between 3 and 50+ shuffles on a chain-shaped
       // component at 100 TB. Labels only ever decrease and stay inside
       // the component, so the monotone-sum convergence check is
-      // unchanged. localCheckpoint(true) is the round's single action;
-      // it truncates lineage so plan depth stays constant per round.
-      // (r16 optimization A/B: replacing this round's eager
-      // localCheckpoint with a lazy persist materialized by the
-      // convergence aggregate — one scheduled job per round instead of
-      // two — measured 4x SLOWER (7.2 s -> 27+ s at sf0.1): the loop's
-      // per-round unpersist of the PARENT frames interacts with the
-      // dependent cache chain and the round's work is recomputed from
-      // lineage. The checkpoint spelling decouples each round's data
-      // from its parents, which is exactly what lets the unpersists be
-      // free. Kept. The same one-job respelling IS kept in the BFS
-      // loops (GraphQueries), which never unpersist mid-loop.)
+      // unchanged.
       val next = propagated.as("a")
         .join(propagated.select(col("doc_id").as("comp"),
           col("comp").as("comp2")).as("b"), Seq("comp"), "left")
         .select(col("doc_id"),
           least(col("comp"), coalesce(col("comp2"), col("comp"))).as("comp"))
-        .truncateLineage(true)
+        .transform(r.materialize)
       // Convergence via a monotone invariant: labels only ever
       // decrease, so sum(comp) is strictly smaller while anything
-      // changed — one aggregate over the just-checkpointed (in-memory)
+      // changed — one aggregate over the just-cut (in-memory)
       // partitions, not a recompute.
-      val nextSum = next.agg(coalesce(sum("comp"), lit(0L)))
-        .head().getLong(0)
-      changed = if (nextSum == lastSum) 0L else 1L
+      val nextSum = labelSum(next)
+      val fixed = nextSum == lastSum
       lastSum = nextSum
-      labels.unpersist()
-      propagated.unpersist()
-      labels = next
-      rounds += 1
+      fixed
     }
-    sym.unpersist()
-    // A silent exit at the round cap would return UNCONVERGED labels —
-    // wrong components that still look plausible (and diverge from the
-    // recursive-CTE oracle with no signal). Fail loudly instead. With
-    // path halving the cap admits diameters ~2^maxRounds, so hitting
-    // it means the edge set itself is pathological, not the algorithm.
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxRounds rounds " +
-          "(component diameter exceeds the cap)")
-    labels
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -674,7 +645,7 @@ object DedupQueries extends QuerySuite {
       // not the corpus (the label table at 100 TB is dup-sized).
       val endpoints = edges.select(col("doc_a").as("doc_id"))
         .unionByName(edges.select(col("doc_b").as("doc_id"))).distinct()
-      connectedComponents(endpoints, edges)
+      connectedComponents("dedup_components", endpoints, edges)
         .groupBy("comp")
         .agg(count(lit(1)).as("n_members"), min("doc_id").as("canonical"))
         .filter(col("n_members") > 1)   // singletons are just "no dup"
@@ -704,7 +675,8 @@ object DedupQueries extends QuerySuite {
         .select("doc_a", "doc_b").persist()
       val endpoints = pairs.select(col("doc_a").as("doc_id"))
         .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
-      val labels = connectedComponents(endpoints, pairs)
+      val labels =
+        connectedComponents("dedup_pipeline_survivors", endpoints, pairs)
       val dropped = labels
         .join(labels.groupBy("comp").agg(min("doc_id").as("keep_id")), "comp")
         .filter(col("doc_id") =!= col("keep_id"))

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions.col
 /** Planted-graph coverage for the k-core peel: a known nucleus
   * survives with exact core degrees, a tree dissolves to nothing, and
   * a deep path EXCEEDING the round bound fails loudly instead of
-  * silently truncating (the CC/BFS non-convergence discipline).
+  * silently truncating, naming its query (the CC/BFS non-convergence
+  * discipline).
   */
 class KCorePeelSpec extends SparkSpec {
   import spark.implicits._
@@ -47,6 +48,7 @@ class KCorePeelSpec extends SparkSpec {
     val ex = intercept[IllegalStateException] {
       GraphQueries.kcorePeel(sym(edges), 2L, 5).collect()
     }
-    assert(ex.getMessage.contains("peeling still live"))
+    assert(ex.getMessage.startsWith("graph_kcore: "), ex.getMessage)
+    assert(ex.getMessage.contains("did not converge within 5 rounds"))
   }
 }

@@ -284,7 +284,7 @@ class DedupSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (6L, 7L),
         (5L, 7L), (8L, 9L))
       .toDF("doc_a", "doc_b")
-    val comps = DedupQueries.connectedComponents(nodes, edges)
+    val comps = DedupQueries.connectedComponents("cc_test", nodes, edges)
       .as[(Long, Long)].collect().toMap
     assert(Seq(1L, 2L, 3L, 4L).map(comps) == Seq(1L, 1L, 1L, 1L))
     assert(Seq(5L, 6L, 7L).map(comps) == Seq(5L, 5L, 5L))
@@ -299,10 +299,27 @@ class DedupSpec extends SparkSpec {
     val n = 300L
     val nodes = (1L to n).toDF("doc_id")
     val edges = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val labels = DedupQueries.connectedComponents(nodes, edges, maxRounds = 15)
+    val labels = DedupQueries.connectedComponents("cc_test", nodes, edges,
+      maxRounds = 15)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(labels.length == n)
     assert(labels.forall(_._2 == 1L))
+  }
+
+  test("connected components leave only their labels cached") {
+    // the Cut policy releases every earlier round's labels, each
+    // round's persisted propagation frame and the symmetrized edges
+    val nodes = (1L to 64L).toDF("doc_id")
+    val edges = (1L until 64L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val labels = DedupQueries.connectedComponents("cc_test", nodes, edges)
+    val kept = labels.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      case p => fail(s"labels are not a cut frame: $p")
+    }
+    assert(sc.getPersistentRDDs.keySet.toSet -- before == Set(kept))
+    assert(labels.filter(col("comp") =!= 1L).isEmpty)
   }
 
   test("connected components fail loudly when the round cap is hit") {
@@ -312,9 +329,11 @@ class DedupSpec extends SparkSpec {
     val nodes = (1L to 5L).toDF("doc_id")
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("doc_a", "doc_b")
     val ex = intercept[IllegalStateException] {
-      DedupQueries.connectedComponents(nodes, edges, maxRounds = 2).collect()
+      DedupQueries.connectedComponents("dedup_components", nodes, edges,
+        maxRounds = 2).collect()
     }
-    assert(ex.getMessage.contains("did not converge"))
+    assert(ex.getMessage.startsWith("dedup_components: "), ex.getMessage)
+    assert(ex.getMessage.contains("did not converge within 2 rounds"))
   }
 
   test("normalized dedup groups reformatted copies that exact dedup misses") {
