@@ -43,11 +43,17 @@ object Explain {
   /** Plan text with the ids that differ between builds of one plan
     * replaced: expression ids, exchange plan ids, lambda variable and
     * class names, object hashes, RDD ids, UUIDs and the seed of
-    * `randstr` (drawn per build when a query gives none); and the source
+    * `randstr` (drawn per build when a query gives none); the source
     * line of the call that created a scanned RDD (`localCheckpoint at
-    * Lineage.scala:<line>`), which moves with every edit above it. */
+    * Lineage.scala:<line>`), which moves with every edit above it; and
+    * the numbers adaptive execution gives its query stages and the
+    * whole-stage-codegen ids around them, which follow the order in
+    * which stages finish. Operator names and tree shape stay. */
   private[graft] def normalize(plan: String): String =
     plan
+      .replaceAll("(?m)(^\\(\\d+\\) \\w*QueryStage\\b[^\\n]*\\n(?:[^\\n]+\\n)*?)Arguments: \\d+$",
+        "$1Arguments: x")
+      .replaceAll("\\[codegen id : \\d+\\]", "[codegen id : x]")
       .replaceAll("#\\d+", "#x")
       .replaceAll("plan_id=\\d+", "plan_id=x")
       .replaceAll("Lambda(\\$\\d+)?/0x[0-9a-f]+", "Lambda")
@@ -58,7 +64,7 @@ object Explain {
       .replaceAll("(\\w+\\.scala):\\d+", "$1:x")
       .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "uuid")
 
-  private def digest(plan: String): String =
+  private[graft] def digest(plan: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(plan.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
 

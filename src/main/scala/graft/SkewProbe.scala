@@ -120,21 +120,6 @@ object SkewProbe {
       case _ => false
     }
 
-  /** Order-free content digest (rows, modular xxhash sum — a raw sum
-    * overflows LONG under ANSI on a half-million-row fan-out): the
-    * skew split may reorder; the oracle sweep already pins ordered
-    * output on the uniform corpus. */
-  private def digest(df: DataFrame): (Long, Long) = {
-    // coalesce: sum() is NULL on zero rows — an empty result must
-    // surface as a (0, 0) digest mismatch in the FAIL line, not an
-    // NPE out of getLong (ADVICE r14)
-    val r = df.agg(count(lit(1)),
-      coalesce(sum(pmod(xxhash64(df.columns.map(col): _*),
-        lit(1000000007L))), lit(0L)))
-      .collect()(0)
-    (r.getLong(0), r.getLong(1))
-  }
-
   /** Session planning the 100 TB shape: no broadcast (membership past
     * the ceiling), AQE on, thresholds scaled to the corpus. */
   private def sortMergeSession(base: SparkSession,
@@ -197,7 +182,7 @@ object SkewProbe {
       val shareOff = maxTaskShare(off, dfOff)
       val shareOn = maxTaskShare(on, dfOn)
       val splits = skewJoins(dfOn)
-      val same = digest(dfOn) == digest(dfOff)
+      val same = SpillProbe.digest(dfOn) == SpillProbe.digest(dfOff)
       check(name,
         splits >= 1 && shareOn <= 0.35 && shareOn < shareOff / 2 && same,
         f"off_share=$shareOff%.3f on_share=$shareOn%.3f " +
@@ -245,7 +230,7 @@ object SkewProbe {
     val hotFrac = fr.getLong(0).toDouble / fr.getLong(1)
     val ts4 = sortMergeSession(spark, skewHandling = true)
     ts4.conf.set("spark.sql.shuffle.partitions", "4")
-    val sameTok = digest(tokenAgg(ts4)) == digest(dfTok)
+    val sameTok = SpillProbe.digest(tokenAgg(ts4)) == SpillProbe.digest(dfTok)
     check("text_token_groupby",
       hotFrac >= 0.6 && shareTok <= 0.2 && sameTok,
       f"hot_frac=$hotFrac%.3f max_share=$shareTok%.3f " +
@@ -284,7 +269,7 @@ object SkewProbe {
     val shareOff = maxTaskShare(off, dfOff)
     val shareOn = maxTaskShare(on, dfOn)
     val splits = skewJoins(dfOn)
-    val same = digest(dfOn) == digest(dfOff)
+    val same = SpillProbe.digest(dfOn) == SpillProbe.digest(dfOff)
     check(name,
       splits >= 1 && shareOff >= offMin && shareOn <= onMax &&
         shareOn < shareOff / 2 && same,

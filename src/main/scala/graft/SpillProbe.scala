@@ -73,11 +73,16 @@ object SpillProbe {
         "dedup_ngram_jaccard_pairs", "dedup_fuzzy_names",
         "route_delivery_gate", "dedup_components"))
 
-  /** Order-free content digest (count, modular xxhash sum — raw sum
-    * overflows LONG under ANSI; the SkewProbe digest). Order-free
+  /** Order-free content digest (count, modular xxhash sum — a raw sum
+    * overflows LONG under ANSI on a half-million-row fan-out). Order-free
     * because the probe's point is that partitioning/spill strategy
-    * may differ between the pressured and normal runs. */
+    * may differ between the pressured and normal runs; SkewProbe compares
+    * its skew-split runs with it for the same reason (the oracle sweep
+    * already pins ordered output). */
   def digest(df: DataFrame): (Long, Long) = {
+    // coalesce: sum() is NULL on zero rows — an empty result must
+    // surface as a (0, 0) digest mismatch in the FAIL line, not an
+    // NPE out of getLong
     val r = df.agg(count(lit(1)),
       coalesce(sum(pmod(xxhash64(df.columns.map(col): _*),
         lit(1000000007L))), lit(0L)))

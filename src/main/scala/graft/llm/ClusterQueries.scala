@@ -86,12 +86,10 @@ object ClusterQueries extends QuerySuite {
     * bit-identical). TOTAL: an empty centroid set assigns NULL
     * (callers filter those rows out, mirroring the oracle's empty
     * cross join; the kernel returns the same NULL for an empty
-    * array). Callers must register the kernel on the session first —
-    * [[assign]] does. */
+    * array). */
   private[llm] def assignExpr(cents: Seq[(Int, Array[Double])]): Column =
     if (cents.isEmpty) lit(null).cast("int")
-    else call_function(graft.plans.NearestCentroidL2.Name,
-      col("qv"), centLit(cents))
+    else graft.plans.NearestCentroidL2.column(col("qv"), centLit(cents))
 
   /** The interpreted HOF twin of [[assignExpr]] — kept for the
     * kernel-equivalence spec: `array_min` over `struct(d2, c_id)` is
@@ -102,13 +100,10 @@ object ClusterQueries extends QuerySuite {
       dist2(col("qv"), c.getField("cv")).as("d2"),
       c.getField("c_id").as("c_id")))).getField("c_id")
 
-  /** Register-then-assign: the kernel resolves at analysis time, so
-    * every assignment site goes through here. */
+  /** Each row's nearest centroid as column `as`. */
   private def assign(q: DataFrame, cents: Seq[(Int, Array[Double])],
-      as: String = "cluster"): DataFrame = {
-    graft.plans.NearestCentroidL2.register(q.sparkSession)
+      as: String = "cluster"): DataFrame =
     q.withColumn(as, assignExpr(cents))
-  }
 
   /** Init: quantized stride-sampled corpus vectors, c_id-ordered. */
   private[llm] def initCents(q: DataFrame): Seq[(Int, Array[Double])] =
@@ -197,7 +192,6 @@ object ClusterQueries extends QuerySuite {
     // assignment as a map-only column; the R-1 counters come out of a
     // single 1-row aggregate, exploded to (round, n_vectors, n_moved).
     "sim_kmeans_moves" -> ((s, d) => {
-      graft.plans.NearestCentroidL2.register(s)
       val cs = centsRounds(s, d)
       val withAll = qCorpus(s, d).select(
         (1 to KmRounds).map(r => assignExpr(cs(r - 1)).as(s"c$r")): _*)
@@ -219,8 +213,6 @@ object ClusterQueries extends QuerySuite {
     // is exact cosine within the query's cluster only. Zero-norm
     // vectors are excluded from scoring in BOTH twins (0/0 cosine).
     "sim_ivf_trained_topk" -> ((s, d) => {
-      graft.plans.FloatVectorDot.register(s)
-      graft.plans.NearestCentroidL2.register(s)
       val cs = centsRounds(s, d)
       val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("qv", quantize(col("embedding")))
@@ -251,8 +243,6 @@ object ClusterQueries extends QuerySuite {
     // BOTH twins before pairing (NaN cosine), though they still took
     // part in training like everything else.
     "dedup_semantic_trained" -> ((s, d) => {
-      graft.plans.FloatVectorDot.register(s)
-      graft.plans.NearestCentroidL2.register(s)
       val cs = centsRounds(s, d)
       val assigned = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("qv", quantize(col("embedding")))
@@ -287,8 +277,6 @@ object ClusterQueries extends QuerySuite {
     // zero-norm answer — so the two totals legitimately differ by the
     // degenerate-vector count.)
     "sim_kmeans_balance" -> ((s, d) => {
-      graft.plans.NearestCentroid.register(s)
-      graft.plans.FloatVectorDot.register(s)
       val cs = centsRounds(s, d)
       val trainedCounts = assign(qCorpus(s, d), cs.last)
         .filter(col("cluster").isNotNull)
@@ -301,7 +289,7 @@ object ClusterQueries extends QuerySuite {
         .agg(collect_list(struct(col("vec_id").as("c_id"),
           col("embedding").as("c_emb"), col("nrm").as("c_nrm"))).as("cents"))
       val strideCounts = e.crossJoin(broadcast(centArr))
-        .select(call_function(graft.plans.NearestCentroid.Name,
+        .select(graft.plans.NearestCentroid.column(
           col("embedding"), col("nrm"), col("cents")).as("cluster"))
         // the kernel's NULL (empty centroid set) mirrors the oracle's
         // empty cross join

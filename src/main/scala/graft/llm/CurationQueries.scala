@@ -620,7 +620,6 @@ object CurationQueries extends QuerySuite {
     * from the aggregated eval side's ACTUAL size. */
   private[graft] def decontaminate(s: SparkSession, d: String,
       hintBroadcast: Boolean): DataFrame = {
-    graft.plans.NGramShingles.register(s)
     val bucket = substring(
       md5(col("doc_id").cast("string").cast("binary")), 1, 2)
     val sh = Tables.documents(s, d)

@@ -60,19 +60,14 @@ object DedupQueries extends QuerySuite {
   /** Documents spread across all cores while the scan arrives in fewer
     * partitions than cores (one parquet split locally): every
     * downstream op here does heavy per-row array/hash work, so
-    * parallelism, not data size, is the constraint. Also
-    * registers the native text kernels the dedup family uses. */
-  private def withWordsFrame(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.plans.NGramShingles.register(s)
-    graft.plans.MinHashSig.register(s)
-    graft.plans.SimHash64.register(s)
+    * parallelism, not data size, is the constraint. */
+  private def withWordsFrame(docs: DataFrame): DataFrame =
     graft.Spread.fanoutScan(docs)
       .withColumn("w", words(col("text")))
       .filter(size(col("w")) >= Shingle)
-  }
 
   private def docsWithWords(s: SparkSession, d: String): DataFrame =
-    withWordsFrame(s, Tables.documents(s, d))
+    withWordsFrame(Tables.documents(s, d))
 
   /** Exploded (doc_id, band_idx, band_hash) bucket rows from a frame
     * with a `sig` signature column. */
@@ -211,7 +206,6 @@ object DedupQueries extends QuerySuite {
       rBits: Int): DataFrame = {
     require(rBits >= 1 && rBits <= 62 && bands >= 1,
       s"unsupported band split: $bands x $rBits")
-    graft.plans.FloatVectorDot.register(e.sparkSession)
     val dots = (0 until bands * rBits).map(b =>
       Vectors.dotNative(col("embedding"), typedLit(plane(b, dim))))
     def bandVal(k: Int) = (0 until rBits).map(j =>
@@ -404,7 +398,6 @@ object DedupQueries extends QuerySuite {
     ngramJaccardPairs(dw, ordered = true)
 
   private[llm] def ngramJaccardPairs(dw: DataFrame, ordered: Boolean): DataFrame = {
-    graft.plans.NGramShingles.register(dw.sparkSession)
     // Shingle arrays feed four consumers (token explode, df counts and
     // both verify-join sides); one materialization beats four compiled
     // recomputes — and at full scale this is the tokenized corpus you
@@ -610,7 +603,6 @@ object DedupQueries extends QuerySuite {
     // integer columns on the already-joined shingle arrays, complete
     // over the suite's jac ≥ 0.2 predicate.
     "dedup_pair_containment" -> ((s, d) => {
-      graft.plans.NGramShingles.register(s)
       val docs = docsWithWords(s, d).select(col("doc_id"), col("source"),
         shinglesNative(col("w"), Shingle).as("sh"))
         .persist()
@@ -667,7 +659,7 @@ object DedupQueries extends QuerySuite {
         .groupBy(md5(col("text").cast("binary")).as("digest"))
         .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
       val kept = docs.join(keepers, Seq("doc_id"), "left_semi")
-      val dw = withWordsFrame(s, kept)
+      val dw = withWordsFrame(kept)
       // same endpoint restriction as dedup_components: docs without a
       // pair label themselves and are never dropped — CC over the
       // near-dup set only
@@ -693,7 +685,6 @@ object DedupQueries extends QuerySuite {
     // hashed ONCE in compiled code, spec-pinned bit-identical to the
     // HOF twin.
     "dedup_minhash_signatures" -> ((s, d) => {
-      graft.plans.MinHashSig.register(s)
       docsWithWords(s, d)
         .withColumn("sig", minHashNative(shinglesNative(col("w"), Shingle), K))
         .select(col("doc_id"),
@@ -710,7 +701,6 @@ object DedupQueries extends QuerySuite {
     // re-reads shingles for candidates only — at scale that is a
     // key-lookup join on a small candidate set.
     "dedup_lsh_candidates" -> ((s, d) => {
-      graft.plans.MinHashSig.register(s)
       val docs = docsWithWords(s, d)
         .select(col("doc_id"), shinglesNative(col("w"), Shingle).as("sh"))
         .withColumn("sig", minHashNative(col("sh"), K))
@@ -735,7 +725,6 @@ object DedupQueries extends QuerySuite {
     // sides' pairs are (a < b)-canonical so the probe is one keyed
     // left join. Detection rates in integer ppm.
     "dedup_lsh_s_curve" -> ((s, d) => {
-      graft.plans.MinHashSig.register(s)
       val dw = docsWithWords(s, d)
       val truth = ngramJaccardPairs(dw, ordered = false)
         .select(col("doc_a"), col("doc_b"), col("jac"))
@@ -763,7 +752,6 @@ object DedupQueries extends QuerySuite {
     // candidate volume is bounded by the same MaxBucket cap as
     // full-corpus LSH. Docs too short to shingle skip the near check.
     "dedup_incremental_new" -> ((s, d) => {
-      graft.plans.MinHashSig.register(s)
       val all = Tables.documents(s, d)
         .withColumn("is_new", col("doc_id") % 10 === 0)
       val ex = all.filter(col("is_new"))
@@ -772,7 +760,7 @@ object DedupQueries extends QuerySuite {
           .select(md5(col("text").cast("binary")).as("dg"),
             col("doc_id").as("od")), "dg")
         .groupBy("doc_id").agg(min("od").as("ex_of"))
-      val docs = withWordsFrame(s, all)
+      val docs = withWordsFrame(all)
         .select(col("doc_id"), col("is_new"),
           shinglesNative(col("w"), Shingle).as("sh"))
         .withColumn("sig", minHashNative(col("sh"), K))
@@ -825,7 +813,6 @@ object DedupQueries extends QuerySuite {
     // the mass the hot-bucket guard drops — the operational view a
     // 100 TB dedup run watches (a skewed band shows up here first).
     "dedup_lsh_bucket_stats" -> ((s, d) => {
-      graft.plans.MinHashSig.register(s)
       val docs = docsWithWords(s, d)
         .select(col("doc_id"),
           minHashNative(shinglesNative(col("w"), Shingle), K).as("sig"))
@@ -862,7 +849,7 @@ object DedupQueries extends QuerySuite {
     // SimHash fingerprints + exact-bucket near-dups. Native one-pass
     // kernel (plans/SimHash64), spec-pinned to the HOF twin.
     "dedup_simhash" -> ((s, d) => {
-      docsWithWords(s, d) // registers the native kernels
+      docsWithWords(s, d)
         .withColumn("simhash", simHashNative(col("w")))
         .select("doc_id", "simhash")
         .orderBy("doc_id")
@@ -880,7 +867,7 @@ object DedupQueries extends QuerySuite {
     // filter, equal by the probe-completeness guarantee (also spec'd
     // on planted fingerprints in DedupSpec).
     "dedup_simhash_radius" -> ((s, d) => {
-      val sigs = docsWithWords(s, d) // registers the native kernels
+      val sigs = docsWithWords(s, d)
         .withColumn("sig", simHashNative(col("w")))
         .select("doc_id", "sig")
       simhashRadiusPairs(sigs)
@@ -898,7 +885,6 @@ object DedupQueries extends QuerySuite {
     // a production near-dup run at cos >= 0.95 gets ~99% recall from
     // the derived parameters.
     "dedup_embedding_lsh" -> ((s, d) => {
-      graft.plans.FloatVectorDot.register(s)
       // zero-norm vectors are excluded (the sim_* cosine convention):
       // two of them share every SRP band (all dots 0) and the verify
       // divides by nrm_a*nrm_b = 0 — ANSI abort in Spark while
@@ -923,7 +909,6 @@ object DedupQueries extends QuerySuite {
     // carries the signal. The dedup_lsh_bucket_stats twin for the
     // embedding path.
     "dedup_srp_bucket_stats" -> ((s, d) => {
-      graft.plans.FloatVectorDot.register(s)
       val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("nrm", Vectors.normNative(col("embedding")))
         .filter(col("nrm") > 0.0)
@@ -948,7 +933,6 @@ object DedupQueries extends QuerySuite {
     "dedup_embedding_pairs" -> ((s, d) => {
       // norms precomputed once per vector (not once per pair) — same
       // deterministic fold, O(n) instead of O(pairs) norm work.
-      graft.plans.FloatVectorDot.register(s)
       val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("nrm", Vectors.normNative(col("embedding")))
         // zero-norm exclusion: cosine against the zero vector is
@@ -981,8 +965,6 @@ object DedupQueries extends QuerySuite {
     // keys on cluster id. Tau 0.4 sits in the top tail of this
     // synthetic corpus (a production run at ~0.95 drops more).
     "dedup_semantic_survivors" -> ((s, d) => {
-      graft.plans.FloatVectorDot.register(s)
-      graft.plans.NearestCentroid.register(s)
       // zero-norm vectors are excluded up front in BOTH twins: their
       // cosine is NaN everywhere, and the engines disagree on NaN
       // ordering (the kernel returns NULL cluster, DuckDB's row_number
@@ -1001,7 +983,7 @@ object DedupQueries extends QuerySuite {
       // dominant cost — same lineage-cut pattern as connectedComponents
       val assigned = e.crossJoin(broadcast(centArr))
         .select(col("vec_id"),
-          call_function(graft.plans.NearestCentroid.Name,
+          graft.plans.NearestCentroid.column(
             col("embedding"), col("nrm"), col("cents")).as("cluster"),
           col("embedding"), col("nrm"))
         .truncateLineage(eager = false)
@@ -1082,7 +1064,6 @@ object DedupQueries extends QuerySuite {
     * corpus means the derived split is mis-provisioned and the LSH
     * dedup recall is dying — page on it. */
   private[graft] def srpKeptMass(s: SparkSession, d: String): DataFrame = {
-    graft.plans.FloatVectorDot.register(s)
     val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
       .withColumn("nrm", graft.llm.Vectors.normNative(col("embedding")))
       .filter(col("nrm") > 0.0)

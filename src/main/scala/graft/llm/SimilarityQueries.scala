@@ -79,7 +79,6 @@ object SimilarityQueries extends QuerySuite {
   /** Corpus with per-vector norm, spread across cores while the scan
     * arrives in fewer partitions than cores (Spread.fanoutScan). */
   private def corpus(s: SparkSession, d: String): DataFrame = {
-    graft.plans.FloatVectorDot.register(s)
     graft.Spread.fanoutScan(Tables.embeddings(s, d))
       .withColumn("nrm", Vectors.normNative(col("embedding")))
   }
@@ -167,7 +166,6 @@ object SimilarityQueries extends QuerySuite {
     // fixed (8,8) split saturated and this query went EMPTY at 200k
     // vectors).
     "sim_knn_graph" -> ((s, d) => {
-      graft.plans.FloatVectorDot.register(s)
       val e = graft.Spread.fanoutScan(Tables.embeddings(s, d))
         .withColumn("nrm", Vectors.normNative(col("embedding")))
         .filter(col("nrm") > 0) // cos undefined on zero vectors
@@ -499,7 +497,6 @@ object SimilarityQueries extends QuerySuite {
     // row_number twin; pinned against the HOF struct-max in
     // NearestCentroidSpec.
     "sim_ivf_topk" -> ((s, d) => {
-      graft.plans.NearestCentroid.register(s)
       // zero-norm guard in BOTH twins: NULL-cluster kernel vs the
       // oracle's NaN-tolerant row_number would otherwise diverge
       val e = corpus(s, d).filter(col("nrm") > 0)
@@ -508,7 +505,7 @@ object SimilarityQueries extends QuerySuite {
           col("embedding").as("c_emb"), col("nrm").as("c_nrm"))).as("cents"))
       val assigned = e.crossJoin(broadcast(centArr))
         .select(col("vec_id"),
-          call_function(graft.plans.NearestCentroid.Name,
+          graft.plans.NearestCentroid.column(
             col("embedding"), col("nrm"), col("cents")).as("cluster"),
           col("embedding"), col("nrm"))
       val qs = assigned.filter(col("vec_id") < 10)
@@ -536,14 +533,13 @@ object SimilarityQueries extends QuerySuite {
     // belongs to exactly one cluster, so scanned counts are exact
     // without dedup. Recall is an integer ppm over n_queries·k.
     "sim_ivf_probe_sweep" -> ((s, d) => {
-      graft.plans.NearestCentroid.register(s)
       val e = corpus(s, d).filter(col("nrm") > 0)
       val centArr = e.filter(col("vec_id") % CentroidStride === 0)
         .agg(collect_list(struct(col("vec_id").as("c_id"),
           col("embedding").as("c_emb"), col("nrm").as("c_nrm"))).as("cents"))
       val assigned = e.crossJoin(broadcast(centArr))
         .select(col("vec_id"),
-          call_function(graft.plans.NearestCentroid.Name,
+          graft.plans.NearestCentroid.column(
             col("embedding"), col("nrm"), col("cents")).as("cluster"),
           col("embedding"), col("nrm"))
       val cents = e.filter(col("vec_id") % CentroidStride === 0)
@@ -627,7 +623,6 @@ object SimilarityQueries extends QuerySuite {
     // a "random" projection — the planes are integer-valued and
     // seedless).
     "sim_random_projection" -> ((s, d) => {
-      graft.plans.FloatVectorDot.register(s)
       // float plane literals: integer components are exact in float,
       // so the native kernel is bit-identical to the double-literal
       // HOF fold (see DedupQueries.plane)
@@ -828,7 +823,7 @@ object SimilarityQueries extends QuerySuite {
       .agg(collect_list(struct(col("m"), col("c_id"), col("sub"))).as("cb"))
 
   /** The row's embedding split into PqM double subvectors. */
-  private def pqSubs: Column_ =
+  private[llm] def pqSubs: Column_ =
     transform(sequence(lit(0), lit(PqM - 1)), m =>
       transform(slice(col("embedding"), m * PqDsub + 1, lit(PqDsub)),
         x => x.cast("double")))
@@ -871,14 +866,13 @@ object SimilarityQueries extends QuerySuite {
     * row while the oracle's row_number still assigns one (the same
     * engine divergence dedup_semantic_survivors guards against). */
   private def ivfpqTopk(s: SparkSession, d: String): DataFrame = {
-    graft.plans.NearestCentroid.register(s)
     val e = corpus(s, d).filter(col("nrm") > 0)
     val centArr = e.filter(col("vec_id") % CentroidStride === 0)
       .agg(collect_list(struct(col("vec_id").as("c_id"),
         col("embedding").as("c_emb"), col("nrm").as("c_nrm"))).as("cents"))
     val assigned = e.crossJoin(broadcast(centArr))
       .select(col("vec_id"),
-        call_function(graft.plans.NearestCentroid.Name,
+        graft.plans.NearestCentroid.column(
           col("embedding"), col("nrm"), col("cents")).as("cluster"),
         col("embedding"))
     val codes = pqAssigned(s, d)
@@ -921,11 +915,10 @@ object SimilarityQueries extends QuerySuite {
     * codebook per row; the HOF twin re-scans it per subspace with an
     * interpreted closure per centroid, spec-pinned bit-identical). */
   private def pqAssigned(s: SparkSession, d: String): DataFrame = {
-    graft.plans.PqAssign.register(s)
     graft.Spread.fanoutScan(Tables.embeddings(s, d))
       .crossJoin(broadcast(pqCodebook(s, d)))
       .withColumn("best",
-        call_function(graft.plans.PqAssign.Name,
+        graft.plans.PqAssign.column(
           col("embedding"), col("cb")))
       // an empty codebook assigns nothing (kernel returns NULL) — drop
       // such rows so the Spark output matches the oracle's empty d/r

@@ -25,12 +25,12 @@ object TextOps {
       sequence(lit(1), size(ws) - (n - 1)),
       i => array_join(slice(ws, i, lit(n)), " ")))
 
-  /** Native single-pass shingles ([[graft.plans.NGramShingles]]) — call
-    * [[graft.plans.NGramShingles.register]] first. Bit-identical to
-    * [[shingles]] under its `size(ws) >= n` guard (spec-pinned);
-    * additionally returns an empty array below the guard. */
+  /** Native single-pass shingles ([[graft.plans.NGramShingles]]).
+    * Bit-identical to [[shingles]] under its `size(ws) >= n` guard
+    * (spec-pinned); additionally returns an empty array below the
+    * guard. */
   def shinglesNative(ws: Column, n: Int): Column =
-    call_function(graft.plans.NGramShingles.Name, ws, lit(n))
+    graft.plans.NGramShingles.column(ws, n)
 
   /** Count-only Jaccard over two distinct-element arrays. The
     * intersect — the expensive per-pair op on the dedup verify path —
@@ -76,18 +76,16 @@ object TextOps {
   def minHashSignature(shingleArr: Column, k: Int): Column =
     minHashFromHashes(shingleHashes(shingleArr), k)
 
-  /** Native single-pass MinHash ([[graft.plans.MinHashSig]]) — call
-    * [[graft.plans.MinHashSig.register]] on the session first.
+  /** Native single-pass MinHash ([[graft.plans.MinHashSig]]).
     * Bit-identical to [[minHashSignature]] (spec-pinned); hashes each
     * shingle exactly once in compiled code. */
   def minHashNative(shingleArr: Column, k: Int): Column =
-    call_function(graft.plans.MinHashSig.Name, shingleArr, lit(k))
+    graft.plans.MinHashSig.column(shingleArr, k)
 
-  /** Native single-pass SimHash ([[graft.plans.SimHash64]]) — call
-    * [[graft.plans.SimHash64.register]] first. Bit-identical to
-    * [[simHash]] (spec-pinned). */
+  /** Native single-pass SimHash ([[graft.plans.SimHash64]]).
+    * Bit-identical to [[simHash]] (spec-pinned). */
   def simHashNative(tokens: Column): Column =
-    call_function(graft.plans.SimHash64.Name, tokens)
+    graft.plans.SimHash64.column(tokens)
 
   /** LSH band keys: signature split into `bands` rows of `r` each,
     * hashed to a bucket id. Explode the result and group by

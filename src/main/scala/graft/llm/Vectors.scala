@@ -15,12 +15,11 @@ import org.apache.spark.sql.functions._
   */
 object Vectors {
 
-  /** Codegen'd native dot product ([[graft.plans.FloatVectorDot]]) —
-    * call [[graft.plans.FloatVectorDot.register]] on the session first.
+  /** Codegen'd native dot product ([[graft.plans.FloatVectorDot]]).
     * Bit-identical to [[dot]]; ~10x faster (tight primitive loop vs
     * interpreted HOFs). */
   def dotNative(a: Column, b: Column): Column =
-    call_function(graft.plans.FloatVectorDot.Name, a, b)
+    graft.plans.FloatVectorDot.column(a, b)
 
   /** Codegen'd native norm. */
   def normNative(a: Column): Column = sqrt(dotNative(a, a))

@@ -1,11 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for the float-embedding dot product —
@@ -85,33 +86,37 @@ case class FloatVectorDot(left: Expression, right: Expression)
 object FloatVectorDot {
   val Name = "graft_vec_dot"
 
-  private def builder(children: Seq[Expression]): Expression = {
+  /** The kernel as a Column: resolves in any session, nothing
+    * registered. */
+  def column(a: Column, b: Column): Column =
+    PlanBridge.column(a, b) { case Seq(x, y) => FloatVectorDot(x, y) }
+
+  private[plans] def builder(children: Seq[Expression]): Expression = {
     require(children.length == 2, s"$Name expects 2 arguments")
     FloatVectorDot(children.head, children(1))
   }
-
-  /** Session-local registration (no extensions conf needed): makes
-    * `expr("graft_vec_dot(a, b)")` resolvable. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    KernelRegistry.register(spark, Name, builder)
-
-  private[plans] val functionDescription =
-    KernelRegistry.description(Name, classOf[FloatVectorDot], builder)
 }
 
-/** Production injection point: `--conf
-  * spark.sql.extensions=graft.plans.GraftExtensions` registers the
-  * native functions in every session of the cluster.
+/** The SQL surface: `--conf
+  * spark.sql.extensions=graft.plans.GraftExtensions` gives every
+  * session of the cluster the kernels by name (`graft_vec_dot(a, b)`
+  * in SQL) and the [[TopKPerKeyStrategy]]. Query code builds the
+  * kernels as Columns and needs none of it.
   */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(FloatVectorDot.functionDescription)
-    ext.injectFunction(MinHashSig.functionDescription)
-    ext.injectFunction(SimHash64.functionDescription)
-    ext.injectFunction(NGramShingles.functionDescription)
-    ext.injectFunction(NearestCentroid.functionDescription)
-    ext.injectFunction(NearestCentroidL2.functionDescription)
-    ext.injectFunction(PqAssign.functionDescription)
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    Seq[(String, Class[_], Seq[Expression] => Expression)](
+      (FloatVectorDot.Name, classOf[FloatVectorDot], FloatVectorDot.builder),
+      (MinHashSig.Name, classOf[MinHashSig], MinHashSig.builder),
+      (SimHash64.Name, classOf[SimHash64], SimHash64.builder),
+      (NGramShingles.Name, classOf[NGramShingles], NGramShingles.builder),
+      (NearestCentroid.Name, classOf[NearestCentroid], NearestCentroid.builder),
+      (NearestCentroidL2.Name, classOf[NearestCentroidL2], NearestCentroidL2.builder),
+      (PqAssign.Name, classOf[PqAssign], PqAssign.builder)
+    ).foreach { case (name, clazz, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(clazz.getName, name), builder))
+    }
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
   }
 }

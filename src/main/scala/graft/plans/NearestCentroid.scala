@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 /** Native IVF centroid assignment: given (embedding, norm) and a
@@ -116,14 +116,15 @@ case class NearestCentroid(first: Expression, second: Expression, third: Express
 object NearestCentroid {
   val Name = "graft_nearest_centroid"
 
-  private def builder(children: Seq[Expression]): Expression = {
+  /** The kernel as a Column: resolves in any session, nothing
+    * registered. */
+  def column(emb: Column, nrm: Column, centroids: Column): Column =
+    PlanBridge.column(emb, nrm, centroids) {
+      case Seq(e, n, c) => NearestCentroid(e, n, c)
+    }
+
+  private[plans] def builder(children: Seq[Expression]): Expression = {
     require(children.length == 3, s"$Name expects (emb, nrm, centroids)")
     NearestCentroid(children(0), children(1), children(2))
   }
-
-  def register(spark: SparkSession): Unit =
-    KernelRegistry.register(spark, Name, builder)
-
-  private[plans] val functionDescription =
-    KernelRegistry.description(Name, classOf[NearestCentroid], builder)
 }

@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 /** Native k-means (Lloyd) assignment: given an integer-quantized
@@ -116,14 +116,13 @@ case class NearestCentroidL2(left: Expression, right: Expression)
 object NearestCentroidL2 {
   val Name = "graft_nearest_centroid_l2"
 
-  private def builder(children: Seq[Expression]): Expression = {
+  /** The kernel as a Column: resolves in any session, nothing
+    * registered. */
+  def column(qv: Column, centroids: Column): Column =
+    PlanBridge.column(qv, centroids) { case Seq(q, c) => NearestCentroidL2(q, c) }
+
+  private[plans] def builder(children: Seq[Expression]): Expression = {
     require(children.length == 2, s"$Name expects (qv, centroids)")
     NearestCentroidL2(children(0), children(1))
   }
-
-  def register(spark: SparkSession): Unit =
-    KernelRegistry.register(spark, Name, builder)
-
-  private[plans] val functionDescription =
-    KernelRegistry.description(Name, classOf[NearestCentroidL2], builder)
 }

@@ -1,12 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 /** Native product-quantization assignment: given a FLOAT embedding and
@@ -156,14 +156,13 @@ object PqAssign {
     StructField("c_id", IntegerType, nullable = false))),
     containsNull = true)
 
-  private def builder(children: Seq[Expression]): Expression = {
+  /** The kernel as a Column: resolves in any session, nothing
+    * registered. */
+  def column(emb: Column, codebook: Column): Column =
+    PlanBridge.column(emb, codebook) { case Seq(e, cb) => PqAssign(e, cb) }
+
+  private[plans] def builder(children: Seq[Expression]): Expression = {
     require(children.length == 2, s"$Name expects (embedding, codebook)")
     PqAssign(children(0), children(1))
   }
-
-  def register(spark: SparkSession): Unit =
-    KernelRegistry.register(spark, Name, builder)
-
-  private[plans] val functionDescription =
-    KernelRegistry.description(Name, classOf[PqAssign], builder)
 }

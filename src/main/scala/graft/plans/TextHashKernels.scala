@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -47,11 +47,22 @@ object TextHashKernels {
     else XxHash64Function.hash(arr.getUTF8String(i), StringType, Seed)
 
   @inline def pmod(x: Long, p: Long): Long = { val m = x % p; if (m < 0) m + p else m }
+
+  /** The integer literal a SQL call passes as a kernel's width. */
+  private[plans] def intLiteral(kernel: String, param: String, e: Expression): Int =
+    e match {
+      case Literal(v: Int, IntegerType) => v
+      case other => throw new IllegalArgumentException(
+        s"$kernel: $param must be an integer literal, got $other")
+    }
 }
 
 /** MinHash signature: ARRAY<STRING> -> ARRAY<BIGINT> of k minima. */
 case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
   import TextHashKernels._
+  // checked when the expression is built, not per row inside a task,
+  // where a non-positive k fails as a NegativeArraySizeException
+  require(k >= 1, s"${MinHashSig.Name}: k must be >= 1, got $k")
 
   // (a_i, b_i) pairs — single source of truth is TextOps.minHashParams.
   private val as: Array[Long] = graft.llm.TextOps.minHashParams(k).map(_._1).toArray
@@ -100,25 +111,15 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 object MinHashSig {
   val Name = "graft_minhash_sig"
 
-  private def builder(children: Seq[Expression]): Expression = {
+  /** The kernel as a Column: resolves in any session, nothing
+    * registered; fails here when `k < 1`. */
+  def column(shingles: Column, k: Int): Column =
+    PlanBridge.column(shingles) { case Seq(c) => MinHashSig(c, k) }
+
+  private[plans] def builder(children: Seq[Expression]): Expression = {
     require(children.length == 2, s"$Name expects (array, k) arguments")
-    val k = children(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"$Name: k must be an integer literal, got $other")
-    }
-    // fail at PLAN time (the NGramShingles require(n >= 1) precedent):
-    // a non-positive k would otherwise defer to a per-row
-    // NegativeArraySizeException inside a task
-    require(k >= 1, s"$Name: k must be >= 1, got $k")
-    MinHashSig(children.head, k)
+    MinHashSig(children.head, TextHashKernels.intLiteral(Name, "k", children(1)))
   }
-
-  def register(spark: SparkSession): Unit =
-    KernelRegistry.register(spark, Name, builder)
-
-  private[plans] val functionDescription =
-    KernelRegistry.description(Name, classOf[MinHashSig], builder)
 }
 
 /** Distinct word n-gram shingles: ARRAY<STRING> -> ARRAY<STRING>.
@@ -140,7 +141,7 @@ object MinHashSig {
   *   - NULL input -> NULL.
   */
 case class NGramShingles(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"shingle width must be >= 1, got $n")
+  require(n >= 1, s"${NGramShingles.Name}: n must be >= 1, got $n")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -185,21 +186,15 @@ case class NGramShingles(child: Expression, n: Int) extends UnaryExpression {
 object NGramShingles {
   val Name = "graft_shingles"
 
-  private def builder(children: Seq[Expression]): Expression = {
+  /** The kernel as a Column: resolves in any session, nothing
+    * registered; fails here when `n < 1`. */
+  def column(words: Column, n: Int): Column =
+    PlanBridge.column(words) { case Seq(c) => NGramShingles(c, n) }
+
+  private[plans] def builder(children: Seq[Expression]): Expression = {
     require(children.length == 2, s"$Name expects (array, n) arguments")
-    val n = children(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"$Name: n must be an integer literal, got $other")
-    }
-    NGramShingles(children.head, n)
+    NGramShingles(children.head, TextHashKernels.intLiteral(Name, "n", children(1)))
   }
-
-  def register(spark: SparkSession): Unit =
-    KernelRegistry.register(spark, Name, builder)
-
-  private[plans] val functionDescription =
-    KernelRegistry.description(Name, classOf[NGramShingles], builder)
 }
 
 /** SimHash fingerprint: ARRAY<STRING> -> BIGINT (64-bit majority vote). */
@@ -255,14 +250,13 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 object SimHash64 {
   val Name = "graft_simhash64"
 
-  private def builder(children: Seq[Expression]): Expression = {
+  /** The kernel as a Column: resolves in any session, nothing
+    * registered. */
+  def column(tokens: Column): Column =
+    PlanBridge.column(tokens) { case Seq(c) => SimHash64(c) }
+
+  private[plans] def builder(children: Seq[Expression]): Expression = {
     require(children.length == 1, s"$Name expects 1 argument")
     SimHash64(children.head)
   }
-
-  def register(spark: SparkSession): Unit =
-    KernelRegistry.register(spark, Name, builder)
-
-  private[plans] val functionDescription =
-    KernelRegistry.description(Name, classOf[SimHash64], builder)
 }

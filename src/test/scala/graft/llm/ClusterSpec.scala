@@ -29,11 +29,7 @@ class ClusterSpec extends SparkSpec {
       .select(col("vec_id"), quantize(col("embedding")).as("qv"))
   }
 
-  private def reg(): Unit =
-    graft.plans.NearestCentroidL2.register(spark)
-
   test("native L2 kernel is bit-identical to the HOF argmin twin") {
-    reg()
     for (q <- Seq(planted, graft.Tables.embeddings(spark, sf)
         .select(col("vec_id"), quantize(col("embedding")).as("qv")))) {
       val cents = initCents(q)
@@ -47,7 +43,6 @@ class ClusterSpec extends SparkSpec {
   }
 
   test("ties go to the lower cluster id; empty clusters keep their centroid") {
-    reg()
     val q = planted
     val cs = centsRoundsOn(q)
     assert(cs.length === KmRounds)
@@ -72,7 +67,6 @@ class ClusterSpec extends SparkSpec {
   }
 
   test("planted corpus is converged: zero moves every round") {
-    reg()
     val q = planted
     val cs = centsRoundsOn(q)
     val cols = (1 to KmRounds).map(r => assignExpr(cs(r - 1)).as(s"c$r"))
@@ -129,12 +123,9 @@ class ClusterSpec extends SparkSpec {
     // AQE off for a traversable plan tree — on a CLONED session (the
     // MomentGuardSpec discipline: mutating the shared session's conf
     // races concurrently-planning shape-sensitive suites). Inputs are
-    // rebuilt on the clone so the plan is governed by its SQLConf, and
-    // the kernel is registered on the CLONE's functionRegistry
-    // (registration is per-session).
+    // rebuilt on the clone so the plan is governed by its SQLConf.
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.adaptive.enabled", "false")
-    graft.plans.NearestCentroidL2.register(s2)
     import s2.implicits._
     // 4000 corpus rows over `parts` partitions: the per-round update
     // must shuffle only the map-side-combined partials, never the rows

@@ -114,7 +114,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("hot-bucket cap keeps LSH candidates linear on 1k identical docs") {
-    graft.plans.MinHashSig.register(spark)
     // pathological fixture: 1000 byte-identical docs (one degenerate
     // band value per band) + one small near-dup pair outside the blob.
     val clones = spark.range(1, 1001)
@@ -226,7 +225,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("SRP-LSH finds planted high-cosine near-dups, skips unrelated vectors") {
-    graft.plans.FloatVectorDot.register(spark)
     val rnd = new scala.util.Random(7)
     def randVec(): Seq[Float] = Seq.fill(64)((rnd.nextDouble() * 2 - 1).toFloat)
     val base = randVec()

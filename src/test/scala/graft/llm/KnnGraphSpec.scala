@@ -24,7 +24,6 @@ class KnnGraphSpec extends SparkSpec {
       assert(pairs == pairs.sorted, s"ranking out of order at $src")
     }
     // candidate soundness: every edge shares at least one SRP band
-    graft.plans.FloatVectorDot.register(spark)
     val e = graft.Tables.embeddings(spark, sf)
       .withColumn("nrm", Vectors.normNative(col("embedding")))
       .filter(col("nrm") > 0)

@@ -13,7 +13,6 @@ class PqKernelSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("native kernel == HOF twin, every vector, distances bit-exact") {
-    PqAssign.register(spark)
     val native = graft.llm.SimilarityQueries.queries("sim_pq_codes")(spark, sf)
       .collect().map(_.toSeq).toSeq
     val hof = {
@@ -31,24 +30,22 @@ class PqKernelSpec extends SparkSpec {
   }
 
   test("empty codebook yields NULL, never a bogus assignment") {
-    PqAssign.register(spark)
     import spark.implicits._
     val df = Seq((1L, Array(1.0f, 2.0f))).toDF("vec_id", "embedding")
       .withColumn("cb", expr(
         "CAST(array() AS ARRAY<STRUCT<m: INT, c_id: INT, sub: ARRAY<DOUBLE>>>)"))
-      .select(call_function(PqAssign.Name,
+      .select(PqAssign.column(
         col("embedding"), col("cb")).as("best"))
     assert(df.collect()(0).isNullAt(0))
   }
 
   test("NULL fields and mixed sub lengths yield NULL, never NPE or a wrong slice") {
-    PqAssign.register(spark)
     import spark.implicits._
     def best(cbSql: String) = {
       val df = Seq((1L, Array(1.0f, 2.0f, 3.0f, 4.0f)))
         .toDF("vec_id", "embedding")
         .withColumn("cb", expr(cbSql))
-        .select(call_function(PqAssign.Name,
+        .select(PqAssign.column(
           col("embedding"), col("cb")).as("best"))
       df.collect()(0)
     }
@@ -76,7 +73,6 @@ class PqKernelSpec extends SparkSpec {
     // (a plan string is never empty) that would keep passing if the
     // kernel silently stopped planning; traverse the optimized plan's
     // expressions instead, then execute
-    PqAssign.register(spark)
     val df = graft.llm.SimilarityQueries.queries("sim_pq_codes")(spark, sf)
     val kernels = df.queryExecution.optimizedPlan.collect {
       case p => p.expressions.flatMap(_.collect { case e: PqAssign => e })

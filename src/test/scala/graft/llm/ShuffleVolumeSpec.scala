@@ -48,7 +48,6 @@ class ShuffleVolumeSpec extends SparkSpec {
   }
 
   test("capped LSH join stays under the linear candidate bound on clones") {
-    graft.plans.MinHashSig.register(spark)
     // worst case: 2000 byte-identical docs — every band degenerates to
     // one bucket, so the uncapped join would emit ~2e6 pairs per band
     val clones = spark.range(1, 2001)
@@ -77,7 +76,6 @@ class ShuffleVolumeSpec extends SparkSpec {
     // uncapped within-bucket pairing Θ(n²/2^SrpR)). Worst case: 2000
     // identical unit vectors — every band of every vector lands in
     // ONE bucket, so the uncapped join would emit ~2e6 pairs per band.
-    graft.plans.FloatVectorDot.register(spark)
     val dim = 16
     val clones = spark.range(1, 2001)
       .select(col("id").as("vec_id"),

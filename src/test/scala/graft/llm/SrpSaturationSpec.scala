@@ -25,7 +25,6 @@ class SrpSaturationSpec extends SparkSpec {
   private val Dim = 16
 
   private def corpus: DataFrame = {
-    graft.plans.FloatVectorDot.register(spark)
     val emb = (idCol: String) =>
       s"transform(sequence(0, ${Dim - 1}), " +
         s"j -> CAST(pmod(xxhash64($idCol, j), 200) - 100 AS FLOAT))"

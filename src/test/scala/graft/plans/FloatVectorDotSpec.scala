@@ -12,7 +12,6 @@ class FloatVectorDotSpec extends SparkSpec {
   import spark.implicits._
 
   test("dotNative == HOF dot bit-exactly on real embeddings") {
-    FloatVectorDot.register(spark)
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val both = e.select(
       Vectors.dot(col("embedding"), col("embedding")).as("hof"),
@@ -26,7 +25,6 @@ class FloatVectorDotSpec extends SparkSpec {
   }
 
   test("edge contract matches the HOF twin: null on mismatch/null-element/null-array") {
-    FloatVectorDot.register(spark)
     val df = Seq(
       (Some(Seq(Some(1.0f), Some(2.0f))), Some(Seq(Some(3.0f), Some(4.0f)))), // clean
       (Some(Seq(Some(1.0f), Some(2.0f))), Some(Seq(Some(3.0f), Some(4.0f), Some(9.0f)))), // length mismatch
@@ -44,7 +42,6 @@ class FloatVectorDotSpec extends SparkSpec {
   }
 
   test("wrong argument types fail analysis with a clear message") {
-    FloatVectorDot.register(spark)
     val e = intercept[Exception] {
       Seq((1, 2)).toDF("a", "b")
         .select(Vectors.dotNative(col("a"), col("b"))).collect()

@@ -11,8 +11,6 @@ import org.apache.spark.sql.functions._
 class NearestCentroidSpec extends SparkSpec {
 
   test("native assignment == HOF struct-max argmax on real embeddings") {
-    FloatVectorDot.register(spark)
-    NearestCentroid.register(spark)
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .withColumn("nrm", Vectors.normNative(col("embedding")))
     val cents = e.filter(col("vec_id") % 20 === 0)
@@ -20,7 +18,7 @@ class NearestCentroidSpec extends SparkSpec {
         col("embedding").as("c_emb"), col("nrm").as("c_nrm"))).as("cents"))
     val both = e.crossJoin(broadcast(cents))
       .select(col("vec_id"),
-        call_function(NearestCentroid.Name,
+        NearestCentroid.column(
           col("embedding"), col("nrm"), col("cents")).as("native"),
         (-array_max(transform(col("cents"), c =>
           struct(
@@ -36,15 +34,13 @@ class NearestCentroidSpec extends SparkSpec {
   }
 
   test("no selectable centroid -> NULL (empty set and all-NaN cosines)") {
-    FloatVectorDot.register(spark)
-    NearestCentroid.register(spark)
     import spark.implicits._
     val centsType = "array<struct<c_id:bigint,c_emb:array<float>,c_nrm:double>>"
     // empty centroid array
     val empty = Seq((1L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
       .withColumn("nrm", Vectors.normNative(col("embedding")))
       .withColumn("cents", array().cast(centsType))
-      .select(call_function(NearestCentroid.Name,
+      .select(NearestCentroid.column(
         col("embedding"), col("nrm"), col("cents")).as("c"))
       .head()
     assert(empty.isNullAt(0), "empty centroid set must assign NULL")
@@ -54,22 +50,20 @@ class NearestCentroidSpec extends SparkSpec {
       .withColumn("cents", array(
         struct(lit(5L).as("c_id"),
           typedLit(Seq(0.0f, 0.0f)).as("c_emb"), lit(0.0).as("c_nrm"))))
-      .select(call_function(NearestCentroid.Name,
+      .select(NearestCentroid.column(
         col("embedding"), col("nrm"), col("cents")).as("c"))
       .head()
     assert(allNaN.isNullAt(0), "all-NaN cosines must assign NULL, not a fake id")
   }
 
   test("NULL slots/fields and dimension mismatches -> NULL, never garbage") {
-    FloatVectorDot.register(spark)
-    NearestCentroid.register(spark)
     import spark.implicits._
     val centsType = "array<struct<c_id:bigint,c_emb:array<float>,c_nrm:double>>"
     def assign(centsSql: String) =
       Seq((1L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
         .withColumn("nrm", Vectors.normNative(col("embedding")))
         .withColumn("cents", expr(centsSql).cast(centsType))
-        .select(call_function(NearestCentroid.Name,
+        .select(NearestCentroid.column(
           col("embedding"), col("nrm"), col("cents")).as("c"))
         .head()
     // a NULL centroid SLOT (outer-joined/filtered list) — pre-guard
@@ -91,8 +85,6 @@ class NearestCentroidSpec extends SparkSpec {
   }
 
   test("tie-break picks the smallest centroid id") {
-    FloatVectorDot.register(spark)
-    NearestCentroid.register(spark)
     import spark.implicits._
     // two identical centroids -> equal cosine -> smaller id wins
     val df = Seq((1L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
@@ -102,7 +94,7 @@ class NearestCentroidSpec extends SparkSpec {
           typedLit(Seq(1.0f, 0.0f)).as("c_emb"), lit(1.0).as("c_nrm")),
         struct(lit(3L).as("c_id"),
           typedLit(Seq(1.0f, 0.0f)).as("c_emb"), lit(1.0).as("c_nrm"))))
-    val cluster = df.select(call_function(NearestCentroid.Name,
+    val cluster = df.select(NearestCentroid.column(
       col("embedding"), col("nrm"), col("cents")).as("c"))
       .head().getLong(0)
     assert(cluster == 3L)

@@ -20,7 +20,6 @@ class TextHashKernelsSpec extends SparkSpec {
     .withColumn("sh", TextOps.shingles(col("w"), 3))
 
   test("native minhash == HOF minhash bit-exactly on real documents") {
-    MinHashSig.register(spark)
     val both = docs.select(
       TextOps.minHashSignature(col("sh"), 32).as("hof"),
       TextOps.minHashNative(col("sh"), 32).as("native"))
@@ -30,7 +29,6 @@ class TextHashKernelsSpec extends SparkSpec {
   }
 
   test("native shingles == HOF shingles on real documents (order included)") {
-    NGramShingles.register(spark)
     val both = docs.select(
       TextOps.shingles(col("w"), 3).as("hof"),
       TextOps.shinglesNative(col("w"), 3).as("native"))
@@ -40,7 +38,6 @@ class TextHashKernelsSpec extends SparkSpec {
   }
 
   test("native shingles: null words skipped in join; short doc -> empty") {
-    NGramShingles.register(spark)
     val df = Seq(1).toDF("one").select(
       array(lit("a"), lit(null).cast("string"), lit("b"), lit("c")).as("arr"),
       array(lit("x")).as("short"))
@@ -54,7 +51,6 @@ class TextHashKernelsSpec extends SparkSpec {
   }
 
   test("native simhash == HOF simhash bit-exactly on real documents") {
-    SimHash64.register(spark)
     val both = docs.select(
       TextOps.simHash(col("w")).as("hof"),
       TextOps.simHashNative(col("w")).as("native"))
@@ -64,7 +60,6 @@ class TextHashKernelsSpec extends SparkSpec {
   }
 
   test("minhash edge contract: empty array -> k nulls; null input -> null") {
-    MinHashSig.register(spark)
     val df = Seq(
       (1L, Some(Seq.empty[String])),
       (2L, None),
@@ -82,8 +77,6 @@ class TextHashKernelsSpec extends SparkSpec {
   }
 
   test("null element hashes to the xxhash64 seed, matching the HOF") {
-    MinHashSig.register(spark)
-    SimHash64.register(spark)
     val df = Seq(1).toDF("one")
       .select(array(lit("x"), lit(null).cast("string"), lit("y")).as("arr"))
     val m = df.select(
@@ -99,7 +92,6 @@ class TextHashKernelsSpec extends SparkSpec {
   }
 
   test("simhash empty array -> 0L") {
-    SimHash64.register(spark)
     val v = Seq(1).toDF("one")
       .select(TextOps.simHashNative(array().cast("array<string>")).as("h"))
       .as[Long].head()
@@ -107,7 +99,6 @@ class TextHashKernelsSpec extends SparkSpec {
   }
 
   test("wrong argument type fails analysis with a clear message") {
-    MinHashSig.register(spark)
     val e = intercept[Exception] {
       Seq((1, 2)).toDF("a", "b")
         .select(TextOps.minHashNative(col("a"), 4)).collect()
