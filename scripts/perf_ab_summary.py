@@ -8,6 +8,15 @@ the gain rule holds: the change wins at least 9/10 of at least ten
 pairs, and its median beats the base median by more than the distance
 between the base's quartiles.
 
+Next to it, a regression verdict against the metric's BENCHMARK.json
+bound (a fraction of the base median):
+  regressed     the change median is worse than the base median by more
+                than the bound;
+  unresolved    the base's quartile spread is wider than the bound and
+                not every change run beats every base run, so these runs
+                cannot tell a regression from host noise;
+  within bound  otherwise.
+
 Usage: python3 scripts/perf_ab_summary.py <perf_ab jsonl>...
 """
 import json
@@ -52,14 +61,23 @@ def load(paths):
     return runs, left_out
 
 
-def main(paths):
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
+def verdict(base_runs, change_runs, bound, lower):
+    """'regressed', 'unresolved' or 'within bound' (see the module doc)."""
+    base, change = quartiles(sorted(base_runs)), quartiles(sorted(change_runs))
+    worse = change[1] - base[1] if lower else base[1] - change[1]
+    if worse > bound * abs(base[1]):
+        return "regressed"
+    beats_all = (max(change_runs) < min(base_runs) if lower
+                 else min(change_runs) > max(base_runs))
+    if base[2] - base[0] > bound * abs(base[1]) and not beats_all:
+        return "unresolved"
+    return "within bound"
+
+
+def summarize(paths, metrics):
+    """One row per workload and end-to-end metric, and the left-out counts."""
     runs, left_out = load(paths)
-    for (w, reason), n in sorted(left_out.items()):
-        print(f"{w}: {n} run(s) left out ({reason})")
-    print(f"{'workload':<14} {'metric':<17} {'pairs':>5} {'base median [q1, q3]':>30} "
-          f"{'change median [q1, q3]':>30} {'wins c/b':>8}  gain rule")
+    rows = []
     for w in sorted(runs):
         # k-th base run of a seed pairs with its k-th change run
         pairs = [(b, c) for sides in runs[w].values()
@@ -74,11 +92,31 @@ def main(paths):
             wins = sum((c < b) if lower else (c > b) for b, c in ps)
             losses = sum((c > b) if lower else (c < b) for b, c in ps)
             gap = base[1] - change[1] if lower else change[1] - base[1]
-            met = len(ps) >= 10 and wins >= 0.9 * len(ps) and gap > base[2] - base[0]
-            fmt = lambda q: f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
-            print(f"{w:<14} {name:<17} {len(ps):>5} {fmt(base):>30} {fmt(change):>30} "
-                  f"{wins:>3}/{losses:<4}  {'met' if met else 'not met'}"
-                  f" (change {100 * (change[1] / base[1] - 1):+.1f}%)")
+            rows.append({
+                "workload": w, "metric": name, "pairs": len(ps),
+                "base": base, "change": change, "wins": wins, "losses": losses,
+                "gain_met": len(ps) >= 10 and wins >= 0.9 * len(ps)
+                            and gap > base[2] - base[0],
+                "verdict": verdict([b for b, _ in ps], [c for _, c in ps],
+                                   m["bound"], lower)})
+    return rows, left_out
+
+
+def main(paths):
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        metrics = json.load(f)["end_to_end"]
+    rows, left_out = summarize(paths, metrics)
+    for (w, reason), n in sorted(left_out.items()):
+        print(f"{w}: {n} run(s) left out ({reason})")
+    print(f"{'workload':<14} {'metric':<17} {'pairs':>5} {'base median [q1, q3]':>30} "
+          f"{'change median [q1, q3]':>30} {'wins c/b':>8}  gain rule             verdict")
+    fmt = lambda q: f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
+    for r in rows:
+        base, change = r["base"], r["change"]
+        gain = (f"{'met' if r['gain_met'] else 'not met'}"
+                f" (change {100 * (change[1] / base[1] - 1):+.1f}%)")
+        print(f"{r['workload']:<14} {r['metric']:<17} {r['pairs']:>5} {fmt(base):>30} "
+              f"{fmt(change):>30} {r['wins']:>3}/{r['losses']:<4}  {gain:<21} {r['verdict']}")
 
 
 if __name__ == "__main__":

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.streaming.{ChannelProcessor, ChannelStream, Ingest}
+import graft.streaming.{ChannelStream, Ingest}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -11,10 +11,8 @@ import org.apache.spark.sql.streaming.OutputMode
   * With the spark-sql-kafka connector on the classpath, swap the
   * MemoryStream for `readStream.format("kafka")` (see Ingest docs).
   *
-  * Usage: graft.StreamDemo <outDir> [--tws] [--system-messages]
-  * (--tws routes through the Spark-4 transformWithState processor on
-  * the RocksDB state store instead of flatMapGroupsWithState;
-  * --system-messages switches on the O40 join/leave enrichment so the
+  * Usage: graft.StreamDemo <outDir> [--system-messages]
+  * (--system-messages switches on the O40 join/leave enrichment so the
   * delivery stream carries synthesized welcome/join/leave rows.)
   */
 object StreamDemo {
@@ -24,21 +22,15 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val out = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/tmp/stream_demo")
-    val useTws = args.contains("--tws")
     val sysMsgs = args.contains("--system-messages")
-    val builder = Session.builder()
-    if (useTws) builder.config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[KafkaRecord]
     val events = Ingest.channelEvents(Ingest.parseFrames(input.toDF()))
-    val deliveries =
-      if (useTws) ChannelProcessor.deliveries(events, systemMessages = sysMsgs)
-      else ChannelStream.deliveries(events, systemMessages = sysMsgs)
+    val deliveries = ChannelStream.deliveries(events, systemMessages = sysMsgs)
 
     val query = Ingest.deliverToParquet(deliveries, s"$out/deliveries",
       s"$out/checkpoint").outputMode(OutputMode.Append).start()

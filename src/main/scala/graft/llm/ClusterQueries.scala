@@ -67,13 +67,13 @@ object ClusterQueries extends QuerySuite {
   /** Squared L2 between the integer vector `qv` and a double centroid:
     * fixed-order left fold, bit-identical to the oracle's
     * `list_sum(list_transform(list_zip(...), ...))`. */
-  private def dist2(qv: Column, cv: Column): Column =
+  private[llm] def dist2(qv: Column, cv: Column): Column =
     aggregate(
       zip_with(qv, cv, (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
       lit(0.0), (acc, v) => acc + v)
 
   /** The K centroids as one literal array column. */
-  private def centLit(cents: Seq[(Int, Array[Double])]): Column =
+  private[llm] def centLit(cents: Seq[(Int, Array[Double])]): Column =
     array(cents.map { case (id, cv) =>
       struct(lit(id).as("c_id"), array(cv.map(lit(_)): _*).as("cv"))
     }: _*)
@@ -81,24 +81,15 @@ object ClusterQueries extends QuerySuite {
   /** Map-only nearest-centroid id for the row's `qv` column: the K
     * centroids ride along as one literal array and the argmin (ties
     * to the lower c_id) runs as ONE compiled pass per row through the
-    * native kernel (plans/NearestCentroidL2 — the HOF twin below pays
-    * ~K×dim interpreted closures per row; ClusterSpec pins them
-    * bit-identical). TOTAL: an empty centroid set assigns NULL
+    * native kernel (plans/NearestCentroidL2 — its HOF twin, kept with
+    * the specs, pays ~K×dim interpreted closures per row; ClusterSpec
+    * pins them bit-identical). TOTAL: an empty centroid set assigns NULL
     * (callers filter those rows out, mirroring the oracle's empty
     * cross join; the kernel returns the same NULL for an empty
     * array). */
   private[llm] def assignExpr(cents: Seq[(Int, Array[Double])]): Column =
     if (cents.isEmpty) lit(null).cast("int")
     else graft.plans.NearestCentroidL2.column(col("qv"), centLit(cents))
-
-  /** The interpreted HOF twin of [[assignExpr]] — kept for the
-    * kernel-equivalence spec: `array_min` over `struct(d2, c_id)` is
-    * the same argmin with ties to the lower id. */
-  private[llm] def assignExprHof(cents: Seq[(Int, Array[Double])]): Column =
-    if (cents.isEmpty) lit(null).cast("int")
-    else array_min(transform(centLit(cents), c => struct(
-      dist2(col("qv"), c.getField("cv")).as("d2"),
-      c.getField("c_id").as("c_id")))).getField("c_id")
 
   /** Each row's nearest centroid as column `as`. */
   private def assign(q: DataFrame, cents: Seq[(Int, Array[Double])],

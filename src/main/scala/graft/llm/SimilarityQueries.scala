@@ -810,7 +810,7 @@ object SimilarityQueries extends QuerySuite {
 
   /** One-row broadcastable PQ codebook: array of (m, c_id, sub) for
     * every subspace × stride-sampled centroid. */
-  private def pqCodebook(s: SparkSession, d: String): DataFrame =
+  private[llm] def pqCodebook(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .filter(col("vec_id") % PqStride === 0 &&
         col("vec_id") < PqStride.toLong * PqK)
@@ -829,7 +829,7 @@ object SimilarityQueries extends QuerySuite {
         x => x.cast("double")))
 
   /** Exact squared L2 as a left fold (both engines agree). */
-  private def pqDist2(a: Column_, b: Column_): Column_ =
+  private[llm] def pqDist2(a: Column_, b: Column_): Column_ =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, v) => acc + v)
 
@@ -895,18 +895,6 @@ object SimilarityQueries extends QuerySuite {
       .orderBy("q_id", "rk")
   }
 
-  /** The interpreted HOF twin of the native [[graft.plans.PqAssign]]
-    * kernel — kept for the bit-equivalence spec (PqKernelSpec). The
-    * empty-codebook guard matches the kernel's NULL there too. */
-  private[llm] def pqBestHof: Column_ =
-    when(size(col("cb")) > 0,
-      transform(sequence(lit(0), lit(PqM - 1)), m =>
-        array_min(transform(
-          filter(col("cb"), c => c.getField("m") === m),
-          c => struct(
-            pqDist2(element_at(col("subs"), m + 1), c.getField("sub")).as("d"),
-            c.getField("c_id").as("c_id"))))))
-
   /** Corpus with `best` = per-subspace array of struct(d, c_id):
     * nearest centroid (ties to the lower id) and its squared distance.
     * Codebook rides along as one broadcast row; assignment is
@@ -925,13 +913,6 @@ object SimilarityQueries extends QuerySuite {
       // CTEs instead of emitting all-NULL code rows
       .filter(col("best").isNotNull)
   }
-
-  /** pqAssigned's HOF form, for the kernel-equivalence spec. */
-  private[llm] def pqAssignedHof(s: SparkSession, d: String): DataFrame =
-    graft.Spread.fanoutScan(Tables.embeddings(s, d))
-      .crossJoin(broadcast(pqCodebook(s, d)))
-      .withColumn("subs", pqSubs)
-      .withColumn("best", pqBestHof)
 
   private def cosSql(a: String, b: String) = Vectors.cosineSql(a, b)
 

@@ -18,17 +18,8 @@ object TextOps {
   def regexTokens(text: Column): Column =
     regexp_extract_all(text, lit("""\w+|[^\w\s]"""), lit(0))
 
-  /** Distinct word n-gram shingles ("a b c" 3-grams). Caller must
-    * guarantee size(words) >= n (filter or guard). */
-  def shingles(ws: Column, n: Int): Column =
-    array_distinct(transform(
-      sequence(lit(1), size(ws) - (n - 1)),
-      i => array_join(slice(ws, i, lit(n)), " ")))
-
-  /** Native single-pass shingles ([[graft.plans.NGramShingles]]).
-    * Bit-identical to [[shingles]] under its `size(ws) >= n` guard
-    * (spec-pinned); additionally returns an empty array below the
-    * guard. */
+  /** Distinct word n-gram shingles ("a b c" 3-grams), one native pass
+    * ([[graft.plans.NGramShingles]]); an empty array below n words. */
   def shinglesNative(ws: Column, n: Int): Column =
     graft.plans.NGramShingles.column(ws, n)
 
@@ -53,37 +44,16 @@ object TextOps {
   def minHashParams(k: Int): Seq[(Long, Long)] =
     (1 to k).map(i => (2L * i + 1, 7919L * i))
 
-  /** Base hashes for MinHash: xxhash64(s) mod p, computed ONCE per
-    * shingle. Materialize this as its own column before fanning out to
-    * the k affine transforms — hashing is the expensive step and must
-    * not be re-evaluated per hash function (it used to run k=32×). */
-  def shingleHashes(shingleArr: Column): Column =
-    transform(shingleArr, s => pmod(xxhash64(s), lit(MinHashPrime)))
-
-  /** k-element MinHash signature over PRE-HASHED shingles
-    * ([[shingleHashes]]): sig_i = min over h of (a_i*h + b_i) mod p.
-    * Only cheap long arithmetic per (shingle, i) — the string hash is
-    * paid once, the same fold-over-prehashed pattern [[simHash]] uses. */
-  def minHashFromHashes(hashArr: Column, k: Int): Column =
-    array(minHashParams(k).map { case (a, b) =>
-      array_min(transform(hashArr, h => pmod(h * a + b, lit(MinHashPrime))))
-    }: _*)
-
-  /** k-element MinHash signature of a shingle array.
-    * h_i(s) = (a_i * (xxhash64(s) mod p) + b_i) mod p; sig_i = min over
-    * shingles. Prefer materializing [[shingleHashes]] as a column first
-    * (see [[minHashFromHashes]]) so the hash runs once, not k times. */
-  def minHashSignature(shingleArr: Column, k: Int): Column =
-    minHashFromHashes(shingleHashes(shingleArr), k)
-
-  /** Native single-pass MinHash ([[graft.plans.MinHashSig]]).
-    * Bit-identical to [[minHashSignature]] (spec-pinned); hashes each
-    * shingle exactly once in compiled code. */
+  /** k-element MinHash signature of a shingle array, one native pass
+    * ([[graft.plans.MinHashSig]]): h_i(s) = (a_i * (xxhash64(s) mod p)
+    * + b_i) mod p with the [[minHashParams]] family, sig_i = min over
+    * shingles; each shingle is hashed once. */
   def minHashNative(shingleArr: Column, k: Int): Column =
     graft.plans.MinHashSig.column(shingleArr, k)
 
-  /** Native single-pass SimHash ([[graft.plans.SimHash64]]).
-    * Bit-identical to [[simHash]] (spec-pinned). */
+  /** 64-bit SimHash of a token array, one native pass
+    * ([[graft.plans.SimHash64]]): per-bit majority vote over
+    * xxhash64(token), as a signed long. */
   def simHashNative(tokens: Column): Column =
     graft.plans.SimHash64.column(tokens)
 
@@ -97,28 +67,6 @@ object TextOps {
           transform(slice(sig, b * r + 1, lit(r)), _.cast("string")))).as("band_hash")))
 
   // ---- SimHash ----------------------------------------------------
-
-  /** 64-bit SimHash of a token array: per-bit majority vote over
-    * xxhash64(token). Returns a signed long. Array-state fold — one
-    * pass over tokens, 64-wide vector state. */
-  def simHash(tokens: Column): Column = {
-    // hash each token ONCE, then fold bit-vectors over the hash array
-    // (folding over raw tokens would re-hash every token per bit).
-    val hashes = transform(tokens, w => xxhash64(w))
-    val bitCounts = aggregate(
-      hashes,
-      array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc,
-        transform(sequence(lit(0), lit(63)),
-          b => call_function("shiftright", h, b).bitwiseAND(1L)),
-        (a, x) => a + x))
-    val n = size(tokens)
-    aggregate(
-      zip_with(bitCounts, sequence(lit(0), lit(63)),
-        (c, b) => when(c * 2 > n, call_function("shiftleft", lit(1L), b))
-          .otherwise(0L)),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
-  }
 
   /** Hamming distance between two simhash longs. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

@@ -12,9 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst kernels for the dedup-family hot path: MinHash
   * signatures and SimHash fingerprints over a token/shingle array.
   *
-  * Why native: the higher-order-function twins
-  * ([[graft.llm.TextOps.minHashSignature]] / [[graft.llm.TextOps.simHash]])
-  * are CodegenFallback — every array element costs an interpreted
+  * Why native: the higher-order-function twins (`minHashSignature` /
+  * `simHash` in the specs' `HofTwins`) are CodegenFallback — every array element costs an interpreted
   * closure call with boxed lambda variables, and the round-1 bench put
   * the dedup family at 73% of total runtime. These kernels do ONE pass
   * over the array in compiled Scala (invoked from whole-stage codegen
@@ -124,7 +123,7 @@ object MinHashSig {
 
 /** Distinct word n-gram shingles: ARRAY<STRING> -> ARRAY<STRING>.
   *
-  * Native twin of [[graft.llm.TextOps.shingles]]
+  * Native twin of `HofTwins.shingles` in the specs
   * (`array_distinct(transform(sequence(1, size-n+1), i ->
   * array_join(slice(ws, i, n), " ")))`) — that composition re-allocates
   * per window in interpreted HOF evaluation and, worse, gets inlined by

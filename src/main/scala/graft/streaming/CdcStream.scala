@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * O(1)-per-key is not enough at 100 TB when the KEY SPACE churns
   * (transient entities never seen again would pin a row forever), so
   * a `ttl` expires idle entities from the store — the same
-  * TTLConfig-based eviction [[ChannelProcessor]] uses, making the
+  * TTLConfig-based eviction [[FirstSeenStream]] uses, making the
   * state size proportional to the LIVE entity set. The ttl is also
   * why version is a per-LIFETIME change counter, not the
   * reconstruction key: an entity that reappears after expiry restarts
@@ -86,7 +86,7 @@ object CdcStream {
   }
 
   /** Wire latest-state maintenance onto a change stream (RocksDB state
-    * store, same provider requirement as [[ChannelProcessor]]). A
+    * store, which transformWithState requires). A
     * `ttl` expires idle entity state (needs processing-time mode). */
   def latestState(changes: Dataset[Change],
       ttl: Option[java.time.Duration] = None): Dataset[Snapshot] = {

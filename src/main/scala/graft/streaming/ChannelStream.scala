@@ -17,9 +17,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale design: keyed BY CHANNEL (bounded cardinality), not by client —
   * state size is O(channels × avg subscribers), and a hot channel's
   * subscriber set stays one state row. Empty channels remove their state
-  * row (the auto-destroy of `lib/ChannelHub.js:85-89,168-172`). For
-  * production the state store would be RocksDB-backed
-  * (`spark.sql.streaming.stateStore.providerClass`).
+  * row (the auto-destroy of `lib/ChannelHub.js:85-89,168-172`), and an
+  * optional `ttl` expires idle channels the same way. The operator runs
+  * under either state store provider, the default HDFS-backed one or
+  * RocksDB (`spark.sql.streaming.stateStore.providerClass`, a session
+  * setting that this code does not choose).
   */
 object ChannelStream {
 
@@ -35,8 +37,9 @@ object ChannelStream {
       origin: String,      // publisher | node | local — loop-prevention flags
       message: String)
 
-  /** Per-channel membership: cid -> owning sid. */
-  case class ChannelState(members: Map[Long, String])
+  /** Per-channel membership: cid -> owning sid, and the processing time
+    * at which the membership expires (`Long.MaxValue` without a TTL). */
+  case class ChannelState(members: Map[Long, String], expiresAt: Long)
 
   /** One delivery row per (message, subscribed client) — the
     * `client.message` emit of `lib/ChannelHub.js:267-273`. */
@@ -59,10 +62,9 @@ object ChannelStream {
   private def ordered(events: Iterator[ChannelEvent]): Seq[ChannelEvent] =
     events.toSeq.sorted(eventOrder)
 
-  /** The shared transition core, used by BOTH stateful operators (this
-    * class's `flatMapGroupsWithState` path and [[ChannelProcessor]]'s
-    * Spark-4 `transformWithState` path) so their semantics cannot
-    * drift. Pure: (members, events) -> (members', deliveries).
+  /** The transition core of the stateful operator, also the pure twin
+    * that specs and perfbench fold batches through.
+    * Pure: (members, events) -> (members', deliveries).
     *
     * With `systemMessages` on, the hub's enrichment (O40,
     * `example/engine-io.server.js:75-80, 117-122`) is applied: a join
@@ -135,27 +137,46 @@ object ChannelStream {
     (members, out.result())
   }
 
-  /** The per-group transition function (flatMapGroupsWithState). */
-  def processChannel(systemMessages: Boolean)(
+  /** The per-group transition function (flatMapGroupsWithState).
+    * With a `ttl`, every batch that leaves a channel non-empty pushes its
+    * expiry to now + ttl. An expired membership reads as empty even when
+    * the group's next batch brings events, and a group whose timeout
+    * fires is removed: the idle-channel auto-destroy. */
+  def processChannel(systemMessages: Boolean,
+      ttl: Option[java.time.Duration] = None)(
       channel: String, events: Iterator[ChannelEvent],
       state: GroupState[ChannelState]): Iterator[Delivery] = {
+    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+    val now = state.getCurrentProcessingTimeMs()
     val (members, out) = applyEvents(channel,
-      state.getOption.map(_.members).getOrElse(Map.empty),
+      state.getOption.filter(_.expiresAt > now).map(_.members)
+        .getOrElse(Map.empty),
       events, systemMessages)
     if (members.isEmpty) state.remove()           // channel auto-destroy
-    else state.update(ChannelState(members))
+    else {
+      state.update(ChannelState(members,
+        ttl.fold(Long.MaxValue)(now + _.toMillis)))
+      ttl.foreach(d => state.setTimeoutDuration(d.toMillis))
+    }
     out.iterator
   }
 
   /** Wire the operator onto a stream of [[ChannelEvent]].
-    * `systemMessages` switches on the O40 join/leave enrichment. */
+    * `systemMessages` switches on the O40 join/leave enrichment. A `ttl`
+    * expires a channel idle for that long (processing time); it needs
+    * a trigger that keeps running batches, since a timeout fires only
+    * inside one. */
   def deliveries(events: Dataset[ChannelEvent],
-      systemMessages: Boolean = false): Dataset[Delivery] = {
+      systemMessages: Boolean = false,
+      ttl: Option[java.time.Duration] = None): Dataset[Delivery] = {
     implicit val stateEnc = Encoders.product[ChannelState]
     implicit val outEnc = Encoders.product[Delivery]
+    val timeout =
+      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+      else GroupStateTimeout.NoTimeout
     events
       .groupByKey(_.channel)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(processChannel(systemMessages))
+      .flatMapGroupsWithState(OutputMode.Append, timeout)(
+        processChannel(systemMessages, ttl))
   }
 }

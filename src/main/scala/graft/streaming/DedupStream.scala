@@ -62,8 +62,8 @@ object DedupStream {
     * with the SAME normalization as the batch `dedup_normalized_groups`
     * (casefold + whitespace-collapse + trim — the stream and batch
     * passes must agree on what counts as a duplicate), then one keyed
-    * stateful stage (RocksDB state store, same provider requirement as
-    * [[ChannelProcessor]]). */
+    * stateful stage (RocksDB state store, which transformWithState
+    * requires). */
   def dedup(docs: Dataset[(Long, String)]): Dataset[Decision] = {
     val s = docs.sparkSession
     import s.implicits._

@@ -26,7 +26,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * micro-batch that changed it, versioned like [[CdcStream]]. As
   * there, O(1)-per-key does not bound the STORE under key churn, so a
   * `ttl` expires idle entities (TTLConfig eviction, the
-  * [[ChannelProcessor]] pattern); a returning entity restarts its
+  * [[CdcStream]] pattern); a returning entity restarts its
   * fold from scratch — for a feature store that is the desired
   * cold-start semantics (a months-stale EWMA is not a usable prior).
   */
@@ -91,7 +91,7 @@ object EwmaStream {
   }
 
   /** Wire EWMA maintenance onto an observation stream (RocksDB state
-    * store, same provider requirement as [[ChannelProcessor]]). A
+    * store, which transformWithState requires). A
     * `ttl` expires idle entity state (needs processing-time mode). */
   def features(obs: Dataset[Obs],
       ttl: Option[java.time.Duration] = None): Dataset[Feat] = {

@@ -82,7 +82,7 @@ object KmvStream {
   }
 
   /** Wire the sketch maintainer onto a hash stream (RocksDB state
-    * store, same provider requirement as [[ChannelProcessor]]). */
+    * store, which transformWithState requires). */
   def sketches(events: Dataset[HashEvent], k: Int): Dataset[SketchRow] = {
     implicit val outEnc = Encoders.product[SketchRow]
     events

@@ -84,8 +84,8 @@ object RateLimitStream {
   }
 
   /** Wire the limiter onto an (event_id, user_id, ts_ms) stream: one
-    * keyed stateful stage (RocksDB state store, same provider
-    * requirement as [[ChannelProcessor]]). */
+    * keyed stateful stage (RocksDB state store, which
+    * transformWithState requires). */
   def limit(events: Dataset[(Long, Long, Long)]): Dataset[Verdict] = {
     val s = events.sparkSession
     import s.implicits._

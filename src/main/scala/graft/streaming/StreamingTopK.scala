@@ -87,7 +87,7 @@ object StreamingTopK {
   }
 
   /** Wire the leaderboard onto an event stream (RocksDB state store,
-    * same provider requirement as [[ChannelProcessor]]). */
+    * which transformWithState requires). */
   def leaderboard(events: Dataset[ValueEvent], k: Int): Dataset[LeaderRow] = {
     implicit val outEnc = Encoders.product[LeaderRow]
     events

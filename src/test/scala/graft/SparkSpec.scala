@@ -29,8 +29,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * under which neither processAllAvailable nor Trigger.AvailableNow
     * ever settles (timer batches keep the stream "busy") — so each
     * batch is its own run with a restart, bounded by a progress-watch
-    * that waits until the run PROVABLY ingested its rows (the
-    * ChannelProcessorSpec harness, generalized for any processor). */
+    * that waits until the run PROVABLY ingested its rows. */
   protected def runTtlFileStream[I <: Product : Encoder, O <: Product : Encoder](
       batches: Seq[Seq[I]], sleepBetweenMs: Long)(
       transform: Dataset[I] => Dataset[O]): Seq[O] = {
@@ -64,7 +63,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Drive a streaming transform over MemoryStream batches on the
     * RocksDB state store, collecting every memory-sink row — the
-    * shared harness for all transformWithState specs. */
+    * shared harness for the transformWithState specs and for
+    * ChannelStream on RocksDB. */
   protected def runRocksDbStream[I, O](batches: Seq[Seq[I]])(
       transform: Dataset[I] => Dataset[O])(
       implicit ienc: Encoder[I], oenc: Encoder[O]): Seq[O] =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import ClusterQueries._
+import HofTwins.assignExprHof
 
 /** Pins the k-means trainer's semantics on a planted corpus where the
   * answer is computable by hand — the argmin tie rule (lower c_id

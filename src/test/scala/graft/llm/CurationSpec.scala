@@ -213,6 +213,7 @@ class CurationSpec extends SparkSpec {
   test("text_decontaminate: matches the interpreted-HOF twin, never flags eval docs") {
     import org.apache.spark.sql.functions._
     import TextOps._
+    import HofTwins.shingles
     val out = CurationQueries.queries("text_decontaminate")(spark, sf)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))

@@ -3,6 +3,7 @@ package graft.llm
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import TextOps._
+import HofTwins.{minHashSignature, shingles, simHash}
 
 /** Properties of the non-oracle-checkable dedup primitives: MinHash
   * signature behavior, LSH candidate recall on planted duplicates,

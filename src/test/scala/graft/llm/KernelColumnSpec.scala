@@ -22,11 +22,11 @@ class KernelColumnSpec extends SparkSpec {
       (2L, Seq("x", null, "y", "z")),
       (3L, Seq("p", "q", "r"))).toDF("id", "w")
     val text = words.select(
-      TextOps.shingles(col("w"), 2).as("sh_hof"),
+      HofTwins.shingles(col("w"), 2).as("sh_hof"),
       TextOps.shinglesNative(col("w"), 2).as("sh"),
-      TextOps.minHashSignature(col("w"), 8).as("mh_hof"),
+      HofTwins.minHashSignature(col("w"), 8).as("mh_hof"),
       TextOps.minHashNative(col("w"), 8).as("mh"),
-      TextOps.simHash(col("w")).as("simh_hof"),
+      HofTwins.simHash(col("w")).as("simh_hof"),
       TextOps.simHashNative(col("w")).as("simh")).collect()
     assert(text.length == 3)
     text.foreach { r =>
@@ -64,7 +64,7 @@ class KernelColumnSpec extends SparkSpec {
       (2, Array(10.0, 10.0, 10.0)))
     val l2 = Seq((1L, Seq(1L, 2L, 3L)), (2L, Seq(9L, 11L, 10L)), (3L, Seq(6L, 6L, 6L)))
       .toDF("vec_id", "qv")
-      .select(ClusterQueries.assignExprHof(cents).as("hof"),
+      .select(HofTwins.assignExprHof(cents).as("hof"),
         ClusterQueries.assignExpr(cents).as("native"))
       .collect()
     assert(l2.map(_.getInt(1)).toSeq == Seq(0, 1, 1), "graft_nearest_centroid_l2")
@@ -80,7 +80,7 @@ class KernelColumnSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
       .withColumn("cb", array(codebook: _*))
       .withColumn("subs", SimilarityQueries.pqSubs)
-      .select(SimilarityQueries.pqBestHof.as("hof"),
+      .select(HofTwins.pqBestHof.as("hof"),
         PqAssign.column(col("embedding"), col("cb")).as("native"))
       .collect()
     assert(pq.length == 2)

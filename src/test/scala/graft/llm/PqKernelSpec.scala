@@ -17,7 +17,7 @@ class PqKernelSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     val hof = {
       import graft.llm.SimilarityQueries._
-      pqAssignedHof(spark, sf)
+      graft.llm.HofTwins.pqAssignedHof(spark, sf)
         .select(Seq(col("vec_id")) ++
           (0 until PqM).map(i =>
             col("best").getItem(i).getField("c_id").as(s"c$i")) :+

@@ -55,7 +55,7 @@ class ShuffleVolumeSpec extends SparkSpec {
         lit("the quick brown fox jumps over the lazy dog again").as("text"))
       .withColumn("w", TextOps.words(col("text")))
       .select(col("doc_id"),
-        TextOps.minHashNative(TextOps.shingles(col("w"), 3), 32).as("sig"))
+        TextOps.minHashNative(HofTwins.shingles(col("w"), 3), 32).as("sig"))
     val obs = Observation("cand")
     val nDocs = 2000L
     val linearBound = nDocs * DedupQueries.Bands * DedupQueries.MaxBucket

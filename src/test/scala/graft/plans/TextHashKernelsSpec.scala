@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.llm.TextOps
+import graft.llm.{HofTwins, TextOps}
 import org.apache.spark.sql.functions._
 
 /** The native MinHash/SimHash kernels must be bit-identical to the
@@ -17,11 +17,11 @@ class TextHashKernelsSpec extends SparkSpec {
     .documents(spark, "/root/testdata/sf0.001")
     .withColumn("w", TextOps.words(col("text")))
     .filter(size(col("w")) >= 3)
-    .withColumn("sh", TextOps.shingles(col("w"), 3))
+    .withColumn("sh", HofTwins.shingles(col("w"), 3))
 
   test("native minhash == HOF minhash bit-exactly on real documents") {
     val both = docs.select(
-      TextOps.minHashSignature(col("sh"), 32).as("hof"),
+      HofTwins.minHashSignature(col("sh"), 32).as("hof"),
       TextOps.minHashNative(col("sh"), 32).as("native"))
       .as[(Seq[Long], Seq[Long])].collect()
     assert(both.nonEmpty)
@@ -30,7 +30,7 @@ class TextHashKernelsSpec extends SparkSpec {
 
   test("native shingles == HOF shingles on real documents (order included)") {
     val both = docs.select(
-      TextOps.shingles(col("w"), 3).as("hof"),
+      HofTwins.shingles(col("w"), 3).as("hof"),
       TextOps.shinglesNative(col("w"), 3).as("native"))
       .as[(Seq[String], Seq[String])].collect()
     assert(both.nonEmpty)
@@ -52,7 +52,7 @@ class TextHashKernelsSpec extends SparkSpec {
 
   test("native simhash == HOF simhash bit-exactly on real documents") {
     val both = docs.select(
-      TextOps.simHash(col("w")).as("hof"),
+      HofTwins.simHash(col("w")).as("hof"),
       TextOps.simHashNative(col("w")).as("native"))
       .as[(Long, Long)].collect()
     assert(both.nonEmpty)
@@ -80,12 +80,12 @@ class TextHashKernelsSpec extends SparkSpec {
     val df = Seq(1).toDF("one")
       .select(array(lit("x"), lit(null).cast("string"), lit("y")).as("arr"))
     val m = df.select(
-      TextOps.minHashSignature(col("arr"), 8).as("hof"),
+      HofTwins.minHashSignature(col("arr"), 8).as("hof"),
       TextOps.minHashNative(col("arr"), 8).as("native"))
       .as[(Seq[Long], Seq[Long])].head()
     assert(m._1 == m._2)
     val s = df.select(
-      TextOps.simHash(col("arr")).as("hof"),
+      HofTwins.simHash(col("arr")).as("hof"),
       TextOps.simHashNative(col("arr")).as("native"))
       .as[(Long, Long)].head()
     assert(s._1 == s._2)

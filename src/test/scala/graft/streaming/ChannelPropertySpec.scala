@@ -71,6 +71,31 @@ class ChannelPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("TTL: an expired membership reads as empty; a timed-out group is removed") {
+    val ttl = Some(java.time.Duration.ofMillis(500))
+    val held = ChannelState(Map(1L -> "n1"), expiresAt = 1500L)
+    def at(now: Long, timedOut: Boolean = false) =
+      TestGroupState.create[ChannelState](Optional.of(held),
+        GroupStateTimeout.ProcessingTimeTimeout, now, Optional.empty[Long](),
+        hasTimedOut = timedOut)
+    def message(t: Long) =
+      Iterator(ChannelEvent(t, "M", "ch", -1, "", "publisher", "m"))
+    // before its expiry the member receives, and the expiry moves on
+    val live = at(1499L)
+    assert(processChannel(false, ttl)("ch", message(1), live).map(_.cid)
+      .toSeq == Seq(1L))
+    assert(live.get.expiresAt == 1999L)
+    assert(live.getTimeoutTimestampMs.get == 1999L)
+    // at its expiry the membership is gone, although the batch has data
+    val expired = at(1500L)
+    assert(processChannel(false, ttl)("ch", message(2), expired).isEmpty)
+    assert(!expired.exists)
+    // a timeout call removes the group
+    val timedOut = at(1600L, timedOut = true)
+    assert(processChannel(false, ttl)("ch", Iterator.empty, timedOut).isEmpty)
+    assert(!timedOut.exists)
+  }
+
   test("state exists iff membership non-empty") {
     for (seed <- 201 to 400) {
       val ops = randomOps(seed)

@@ -170,6 +170,68 @@ class ChannelStreamSpec extends SparkSpec {
     }
   }
 
+  /** The same operator on the RocksDB state store provider. */
+  private def runRocksDb(batches: Seq[Seq[ChannelEvent]],
+      systemMessages: Boolean = false): Seq[Delivery] =
+    runRocksDbStream(batches)(deliveries(_, systemMessages = systemMessages))
+
+  test("on RocksDB: join/message/leave across micro-batches") {
+    val out = runRocksDb(Seq(
+      Seq(ev(1, "J", "news", 1, "n1"), ev(2, "J", "news", 2, "n2")),
+      Seq(ev(3, "M", "news", msg = "hello")),
+      Seq(ev(4, "L", "news", 1)),
+      Seq(ev(5, "M", "news", msg = "again"))))
+    assert(out.map(d => (d.cid, d.message)).toSet ==
+      Set((1L, "hello"), (2L, "hello"), (2L, "again")))
+  }
+
+  test("on RocksDB: system-message enrichment (O40) in order") {
+    val out = runRocksDb(Seq(
+      Seq(ev(1, "J", "hub", 1, "n1")),
+      Seq(ev(2, "J", "hub", 2, "n2")),
+      Seq(ev(3, "M", "hub", msg = "hello")),
+      Seq(ev(4, "L", "hub", 1))),
+      systemMessages = true)
+    assert(out.map(d => (d.cid, d.message, d.origin)) == Seq(
+      (1L, "system:welcome:1", "system"),
+      (2L, "system:welcome:2", "system"),
+      (1L, "system:join:2", "system"),
+      (1L, "hello", "publisher"),
+      (2L, "hello", "publisher"),
+      (2L, "system:leave:1", "system")))
+  }
+
+  test("on RocksDB: state persists across micro-batches and channel empties cleanly") {
+    val out = runRocksDb(Seq(
+      Seq(ev(1, "J", "ch", 9, "n1")),
+      Seq(ev(2, "K", "ch", 9)),
+      Seq(ev(3, "M", "ch", msg = "nobody"))))
+    assert(out.isEmpty)
+  }
+
+  /** A processing-time timeout keeps the stream running batches, so TTL
+    * runs go through the restart-per-batch file-source harness. */
+  private def runTtl(ttl: java.time.Duration, sleepBetweenMs: Long,
+      batches: Seq[Seq[ChannelEvent]]): Seq[Delivery] =
+    runTtlFileStream(batches, sleepBetweenMs)(deliveries(_, ttl = Some(ttl)))
+
+  test("TTL expires idle channel state (the auto-destroy analog)") {
+    // Only the SAFE direction is asserted: after sleeping well past the
+    // TTL, the membership must be gone — scheduler delays can only make
+    // the sleep longer, never resurrect state, so this cannot flake.
+    val out = runTtl(java.time.Duration.ofMillis(500), sleepBetweenMs = 3000,
+      Seq(Seq(ev(1, "J", "ttlch", 1, "n1")),
+        Seq(ev(2, "M", "ttlch", msg = "after-expiry"))))
+    assert(out.isEmpty, s"state should have expired, got $out")
+  }
+
+  test("long TTL retains state across immediate restarts") {
+    val out = runTtl(java.time.Duration.ofHours(1), sleepBetweenMs = 0,
+      Seq(Seq(ev(1, "J", "keepch", 1, "n1")),
+        Seq(ev(2, "M", "keepch", msg = "kept"))))
+    assert(out.map(d => (d.cid, d.message)) == Seq((1L, "kept")))
+  }
+
   test("streaming status snapshot reports progress of the active query") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[ChannelEvent]

@@ -20,7 +20,9 @@ class CheckpointRecoverySpec extends SparkSpec {
   private def writeBatch(dir: String, name: String, events: Seq[ChannelEvent]): Unit =
     events.toDS().repartition(1).write.mode("append").json(s"$dir/in")
 
-  test("restart from checkpoint neither loses nor duplicates deliveries") {
+  /** Stop mid-stream, restart from the checkpoint, and check the
+    * delivery log; run once per state store provider. */
+  private def restartKeepsDeliveriesExact(): Unit = {
     val root = Files.createTempDirectory("ckpt_rec").toString
     val schema = implicitly[org.apache.spark.sql.Encoder[ChannelEvent]].schema
 
@@ -59,6 +61,14 @@ class CheckpointRecoverySpec extends SparkSpec {
     val got = out.map(d => (d.cid, d.message)).sorted.toSeq
     assert(got == Seq((1L, "first"), (2L, "first"), (2L, "second")),
       s"unexpected delivery log: $got")
+  }
+
+  test("restart from checkpoint neither loses nor duplicates deliveries") {
+    restartKeepsDeliveriesExact()
+  }
+
+  test("restart from checkpoint neither loses nor duplicates deliveries (RocksDB)") {
+    withRocksDbProvider(restartKeepsDeliveriesExact())
   }
 
   test("transformWithState leaderboard state survives a restart (RocksDB)") {

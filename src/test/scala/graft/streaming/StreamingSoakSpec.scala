@@ -22,7 +22,7 @@ import scala.util.Random
   *     fold over the same batch sequence (the batch twin) — no drift,
   *     loss, or duplication across hundreds of RocksDB commits.
   * Peak state sizes are printed for the BENCH_NOTES soak row. TTL
-  * eviction itself is pinned in ChannelProcessorSpec (processing-time
+  * eviction itself is pinned in ChannelStreamSpec (processing-time
   * mode needs the restart harness); this soak runs the append-mode
   * paths whose eviction mechanism is the empty-state clear.
   */
@@ -71,7 +71,7 @@ class StreamingSoakSpec extends SparkSpec {
       } finally q.stop()
     }
 
-  test(s"ChannelProcessor: $Batches-batch churn, state bounded by live channels, twin-exact") {
+  test(s"ChannelStream: $Batches-batch churn, state bounded by live channels, twin-exact") {
     val rng = new Random(13)
     val channels = (0 until 40).map(i => s"ch$i")
     var ts = 0L
@@ -93,7 +93,7 @@ class StreamingSoakSpec extends SparkSpec {
       }
     }
     val (got, peak, perBatch, _) = soak(batches)(ds =>
-      ChannelProcessor.deliveries(ds))
+      ChannelStream.deliveries(ds))
     // bound: one state row per NON-EMPTY channel, at every batch
     assert(peak <= channels.size,
       s"state rows $peak exceeded the ${channels.size}-channel bound")
@@ -117,7 +117,7 @@ class StreamingSoakSpec extends SparkSpec {
       s"deliveries = ${got.size}")
   }
 
-  test(s"ChannelProcessor: $Batches-batch churn with a restart every 50 batches, twin-exact across restarts") {
+  test(s"ChannelStream: $Batches-batch churn with a restart every 50 batches, twin-exact across restarts") {
     // The rolling-upgrade scenario (VERDICT r13 task 4): same seeded
     // churn as the uninterrupted soak, but the query is STOPPED and
     // restarted from its RocksDB checkpoint every ~50 batches — with
@@ -160,7 +160,7 @@ class StreamingSoakSpec extends SparkSpec {
       def writeBatch(b: Seq[ChannelStream.ChannelEvent]): Unit =
         b.toDS().repartition(1).write.mode("append").json(s"$root/in")
       def startQuery(): StreamingQuery =
-        ChannelProcessor.deliveries(
+        ChannelStream.deliveries(
             spark.readStream.schema(schema).json(s"$root/in")
               .as[ChannelStream.ChannelEvent])
           .writeStream.format("parquet")
