@@ -5,8 +5,8 @@
 # once on each side, back to back, so both sample the same host-noise
 # window; the side that goes first alternates from seed to seed. Each
 # run's result line (the last line run.py prints) is appended to a jsonl
-# file, tagged with its side:
-#   {"side":"base","workload":"router_fanout","seed":21,"trace":0,
+# file, tagged with its side and whether it ran first or second in its pair:
+#   {"side":"base","workload":"router_fanout","seed":21,"trace":0,"order":1,
 #    "rev":"<git describe --dirty>","result":{"correct":true,...}}
 # A run that prints no result line is recorded with "result": null and
 # its exit status. Each checkout builds its own classes (perfbench/build.py).
@@ -26,7 +26,7 @@ HERE=$PWD
 # stdin: one run's output; argv: its tags. Appends the tagged record.
 RECORD='
 import json, sys
-side, workload, seed, trace, rev, status, out = sys.argv[1:]
+side, workload, seed, trace, order, rev, status, out = sys.argv[1:]
 lines = [l for l in sys.stdin.read().splitlines() if l.startswith("{")]
 result = None
 if lines:
@@ -37,7 +37,7 @@ if lines:
 if not (isinstance(result, dict) and "correct" in result):
     result = None
 rec = {"side": side, "workload": workload, "seed": int(seed),
-       "trace": int(trace), "rev": rev, "result": result}
+       "trace": int(trace), "order": int(order), "rev": rev, "result": result}
 if result is None:
     rec["exit"] = int(status)
 with open(out, "a") as f:
@@ -46,10 +46,10 @@ print(json.dumps(rec)[:300])
 '
 
 run() {
-  local dir=$1 side=$2 seed=$3 out status=0
+  local dir=$1 side=$2 seed=$3 order=$4 out status=0
   out=$(cd "$dir" && python3 perfbench/run.py --workload "$WORKLOAD" --seed "$seed" \
     --seconds "${RUN_SECONDS:-20}" --trace "${TRACE:-0}") || status=$?
-  python3 -c "$RECORD" "$side" "$WORKLOAD" "$seed" "${TRACE:-0}" \
+  python3 -c "$RECORD" "$side" "$WORKLOAD" "$seed" "${TRACE:-0}" "$order" \
     "$(git -C "$dir" describe --always --dirty --abbrev=7 2>/dev/null || echo unknown)" \
     "$status" "$OUT" <<<"$out"
 }
@@ -57,9 +57,9 @@ run() {
 i=0
 for seed in "$@"; do
   if [ $((i % 2)) -eq 0 ]; then
-    run "$BASE" base "$seed"; run "$HERE" change "$seed"
+    run "$BASE" base "$seed" 1; run "$HERE" change "$seed" 2
   else
-    run "$HERE" change "$seed"; run "$BASE" base "$seed"
+    run "$HERE" change "$seed" 1; run "$BASE" base "$seed" 2
   fi
   i=$((i + 1))
 done

@@ -17,6 +17,12 @@ bound (a fraction of the base median):
                 cannot tell a regression from host noise;
   within bound  otherwise.
 
+Last, the within-pair order effect: the median over the pairs of the
+second run's value divided by the first run's, whichever side ran
+second. A ratio far from 1 means the position in a pair moves the metric
+by itself. Records without "order" (files older than that field) are
+left out of this column only.
+
 Usage: python3 scripts/perf_ab_summary.py <perf_ab jsonl>...
 """
 import json
@@ -35,7 +41,7 @@ def quartiles(xs):
 
 
 def load(paths):
-    """{workload: {seed: {side: [metrics, ...]}}} of correct untraced runs,
+    """{workload: {seed: {side: [(metrics, order), ...]}}} of correct untraced runs,
     and a count of the runs left out per (workload, reason)."""
     runs, left_out = {}, {}
     for path in paths:
@@ -53,8 +59,9 @@ def load(paths):
                     reason = "incorrect or failed"
                 else:
                     seeds = runs.setdefault(w, {}).setdefault(rec["seed"], {})
-                    seeds.setdefault(rec["side"], []).append(
-                        {k: v["value"] for k, v in res["metrics"].items()})
+                    seeds.setdefault(rec["side"], []).append((
+                        {k: v["value"] for k, v in res["metrics"].items()},
+                        rec.get("order")))
                     continue
                 key = (w, reason)
                 left_out[key] = left_out.get(key, 0) + 1
@@ -84,9 +91,15 @@ def summarize(paths, metrics):
                  for b, c in zip(sides.get("base", []), sides.get("change", []))]
         for m in metrics:
             name, lower = m["name"], m["better"] == "lower"
-            ps = [(b[name], c[name]) for b, c in pairs if name in b and name in c]
+            ps = [(b[name], c[name]) for (b, _), (c, _) in pairs
+                  if name in b and name in c]
             if not ps:
                 continue
+            # (first, second) of each pair whose runs both record their order
+            ordered = [(b[name], c[name]) if bo == 1 else (c[name], b[name])
+                       for (b, bo), (c, co) in pairs
+                       if {bo, co} == {1, 2} and name in b and name in c]
+            ratios = [second / first for first, second in ordered if first]
             base = quartiles(sorted(b for b, _ in ps))
             change = quartiles(sorted(c for _, c in ps))
             wins = sum((c < b) if lower else (c > b) for b, c in ps)
@@ -98,7 +111,9 @@ def summarize(paths, metrics):
                 "gain_met": len(ps) >= 10 and wins >= 0.9 * len(ps)
                             and gap > base[2] - base[0],
                 "verdict": verdict([b for b, _ in ps], [c for _, c in ps],
-                                   m["bound"], lower)})
+                                   m["bound"], lower),
+                "order_ratio": statistics.median(ratios) if ratios else None,
+                "order_pairs": len(ratios)})
     return rows, left_out
 
 
@@ -109,14 +124,18 @@ def main(paths):
     for (w, reason), n in sorted(left_out.items()):
         print(f"{w}: {n} run(s) left out ({reason})")
     print(f"{'workload':<14} {'metric':<17} {'pairs':>5} {'base median [q1, q3]':>30} "
-          f"{'change median [q1, q3]':>30} {'wins c/b':>8}  gain rule             verdict")
+          f"{'change median [q1, q3]':>30} {'wins c/b':>8}  gain rule             "
+          f"{'verdict':<12}  2nd/1st (pairs)")
     fmt = lambda q: f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
     for r in rows:
         base, change = r["base"], r["change"]
         gain = (f"{'met' if r['gain_met'] else 'not met'}"
                 f" (change {100 * (change[1] / base[1] - 1):+.1f}%)")
+        order = ("-" if r["order_ratio"] is None
+                 else f"{r['order_ratio']:.3f} ({r['order_pairs']})")
         print(f"{r['workload']:<14} {r['metric']:<17} {r['pairs']:>5} {fmt(base):>30} "
-              f"{fmt(change):>30} {r['wins']:>3}/{r['losses']:<4}  {gain:<21} {r['verdict']}")
+              f"{fmt(change):>30} {r['wins']:>3}/{r['losses']:<4}  {gain:<21} "
+              f"{r['verdict']:<12}  {order}")
 
 
 if __name__ == "__main__":

@@ -18,10 +18,13 @@ METRICS = [
 ]
 
 
-def record(side, seed, metrics, correct=True, workload="w"):
-    return {"side": side, "workload": workload, "seed": seed, "trace": 0, "rev": "x",
-            "result": {"correct": correct, "failed": 0,
-                       "metrics": {k: {"value": v} for k, v in metrics.items()}}}
+def record(side, seed, metrics, correct=True, workload="w", order=None):
+    rec = {"side": side, "workload": workload, "seed": seed, "trace": 0, "rev": "x",
+           "result": {"correct": correct, "failed": 0,
+                      "metrics": {k: {"value": v} for k, v in metrics.items()}}}
+    if order is not None:
+        rec["order"] = order
+    return rec
 
 
 class VerdictTest(unittest.TestCase):
@@ -83,6 +86,26 @@ class VerdictTest(unittest.TestCase):
         rows, left_out = self.summarize([(100, 2000)], [(100, 2000)], extra=[bad])
         self.assertEqual(left_out, {("w", "incorrect or failed"): 1})
         self.assertEqual(rows["throughput_per_s"]["pairs"], 1)
+
+    def test_order_effect_is_second_over_first_whichever_side(self):
+        # the second run of every pair reads 1.3x the first, and the side
+        # that runs first alternates; one older pair carries no order
+        recs = []
+        for seed, first in enumerate([100, 110, 120, 130]):
+            sides = ("base", "change") if seed % 2 == 0 else ("change", "base")
+            for order, (side, tp) in enumerate(zip(sides, (first, 1.3 * first)), 1):
+                recs.append(record(side, seed, {"throughput_per_s": tp,
+                                                "peak_rss_mb": 2000}, order=order))
+        recs += [record("base", 9, {"throughput_per_s": 100, "peak_rss_mb": 2000}),
+                 record("change", 9, {"throughput_per_s": 500, "peak_rss_mb": 2000})]
+        rows, _ = self.summarize([], [], extra=recs)
+        tp = rows["throughput_per_s"]
+        self.assertEqual(tp["pairs"], 5)
+        self.assertEqual(tp["order_pairs"], 4)
+        self.assertAlmostEqual(tp["order_ratio"], 1.3)
+        self.assertAlmostEqual(rows["peak_rss_mb"]["order_ratio"], 1.0)
+        # base and change each win half of the ordered pairs
+        self.assertEqual((tp["wins"], tp["losses"]), (3, 2))
 
 
 if __name__ == "__main__":

@@ -38,16 +38,8 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new JobCounts(spark.sparkContext)
 
-    // local-iteration filter (same contract as Verify): comma-separated
-    // name prefixes; unset (the driver's mode) benches every query
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val selected = only match {
-      case Some(ps) => SparkEntry.queries.filter { case (n, _) =>
-        ps.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
     // (name, sweep seconds or -1, jobs, back-to-back reruns)
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val secs = timed(spark, name, fn, sfDir)
       val n = jobs(name)
       val reruns = Seq.fill(reps - 1)(timed(spark, name, fn, sfDir))

@@ -182,15 +182,12 @@ object ScalingCurve {
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES",
       "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1")
       .split(",").toSeq
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val ampSkip = sys.env.getOrElse("SPARK_GRAFT_AMP_SKIP", "")
       .split(",").filter(_.nonEmpty).toSeq
     val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter {
-      case (n, _) => only.forall(_.exists(n.startsWith))
-    }
+    val selected = SparkEntry.selected.toSeq.sortBy(_._1)
     val results = selected.flatMap { case (name, fn) =>
       val dirs =
         if (ampSkip.exists(name.startsWith)) scales.dropRight(1) else scales

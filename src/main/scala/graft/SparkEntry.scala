@@ -47,6 +47,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     suites.flatMap(_.queries).toMap
 
+  /** The queries a run selects: SPARK_GRAFT_ONLY is a comma-separated
+    * list of name prefixes, and unset selects every query. Bench, Verify
+    * and ScalingCurve read it only here. */
+  def selected: Map[String, (SparkSession, String) => DataFrame] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
+    queries.filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -146,14 +147,9 @@ object SpillProbe {
         try {
           val df = SparkEntry.queries(name)(spark, sfDir)
           val (n, dg) = digest(df)
-          // listener events dispatch asynchronously — drain to
-          // stability (the SkewProbe discipline)
-          var last = -1L; var stable = 0; var waited = 0
-          while (stable < 2 && waited < 3000) {
-            val now = spillBytes.get()
-            if (now == last) stable += 1 else { stable = 0; last = now }
-            Thread.sleep(100); waited += 100
-          }
+          // listener events dispatch asynchronously: drain the bus so
+          // every task-end of the query has been counted
+          ListenerDrain(spark.sparkContext)
           (n, dg, spillBytes.get())
         } finally spark.sparkContext.removeSparkListener(listener)
       }

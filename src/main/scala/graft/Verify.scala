@@ -9,15 +9,7 @@ object Verify {
     val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter: comma-separated name prefixes; unset (the
-    // driver's mode) dumps every query
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val selected = only match {
-      case Some(ps) => SparkEntry.queries.filter { case (n, _) =>
-        ps.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    SparkEntry.selected.foreach { case (name, fn) =>
       // repartition(1), NOT coalesce(1): coalesce inserts no shuffle,
       // so on a narrow plan it collapses the WHOLE scan+transform into
       // one task (and single-threads a global-sort tail) — repartition

@@ -347,7 +347,6 @@ object GraphQueries extends QuerySuite {
     (deg, oriented)
   }
 
-  /** Symmetrized distinct edge list (src, dst). */
   /** (node, label) after [[LpaRounds]] synchronous label-propagation
     * rounds over a symmetric edge list (Raghavan et al. PRE'07, made
     * deterministic: most-frequent neighbor label, ties to the
@@ -379,6 +378,7 @@ object GraphQueries extends QuerySuite {
     labels
   }
 
+  /** Symmetrized distinct edge list (src, dst). */
   private def edges(s: SparkSession, d: String): DataFrame = {
     val fwd = Tables.orders(s, d).select("o_orderkey", "o_custkey")
       .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Streaming CDC latest-state maintenance: the incremental twin of the
   * batch `cdc_latest_state` compaction. Keyed by entity, the state is
@@ -9,7 +8,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * batch window rank uses; a micro-batch emits one updated snapshot row
   * per key it actually advanced — downstream reconstructs "the table
   * now" as argmax(last_ts, last_event) per key: the SAME total order
-  * the processor keeps, so reconstruction is correct under every
+  * the fold keeps, so reconstruction is correct under every
   * configuration (see the ttl caveat below for why max(version) is
   * NOT the contract).
   *
@@ -30,26 +29,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * expiry cannot rewind. ([[EwmaStream]]'s version column carries the
   * same contract.)
   */
-class CdcStream(ttl: Option[java.time.Duration] = None)
-    extends StatefulProcessor[Long, CdcStream.Change, CdcStream.Snapshot] {
-  import CdcStream._
-
-  @transient private var cur: org.apache.spark.sql.streaming.ValueState[Snapshot] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    cur = getHandle.getValueState[Snapshot](
-      "latest", Encoders.product[Snapshot],
-      ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-
-  override def handleInputRows(key: Long, rows: Iterator[Change],
-      timers: TimerValues): Iterator[Snapshot] = {
-    val prev = if (cur.exists()) Some(cur.get()) else None
-    val (out, next) = advance(key, prev, rows.toSeq)
-    next.filter(n => prev.forall(_ != n)).foreach(cur.update)
-    out.iterator
-  }
-}
-
 object CdcStream {
   case class Change(user_id: Long, ts: Long, event_id: Long,
       event_type: String, value: Double)
@@ -85,16 +64,10 @@ object CdcStream {
     }
   }
 
-  /** Wire latest-state maintenance onto a change stream (RocksDB state
-    * store, which transformWithState requires). A
-    * `ttl` expires idle entity state (needs processing-time mode). */
+  /** Wire latest-state maintenance onto a change stream through
+    * [[KeyedFold]]. A `ttl` expires idle entity state. */
   def latestState(changes: Dataset[Change],
-      ttl: Option[java.time.Duration] = None): Dataset[Snapshot] = {
-    implicit val outEnc = Encoders.product[Snapshot]
-    val timeMode = TtlModes.timeModeFor(ttl)
-    changes
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new CdcStream(ttl), timeMode,
-        OutputMode.Append())
-  }
+      ttl: Option[java.time.Duration] = None): Dataset[Snapshot] =
+    KeyedFold(changes.groupByKey(_.user_id)(Encoders.scalaLong), "latest",
+      Encoders.product[Snapshot], Encoders.product[Snapshot], ttl)(advance)
 }

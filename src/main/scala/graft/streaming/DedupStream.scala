@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions.{col, lower, md5, regexp_replace, trim}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Streaming exact dedup: the incremental twin of the batch
   * `dedup_exact_groups`/`dedup_exact_survivors` pair. Keyed by content
@@ -18,24 +17,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * replayed doc gets the identical decision). Only digests key the
   * state store; document text never enters state.
   */
-class DedupStream
-    extends StatefulProcessor[String, DedupStream.DocEvent, DedupStream.Decision] {
-  import DedupStream._
-
-  @transient private var first: org.apache.spark.sql.streaming.ValueState[FirstSeen] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    first = getHandle.getValueState[FirstSeen](
-      "first", Encoders.product[FirstSeen], TTLConfig.NONE)
-
-  override def handleInputRows(digest: String, rows: Iterator[DocEvent],
-      timers: TimerValues): Iterator[Decision] = {
-    val existing = if (first.exists()) Some(first.get().doc_id) else None
-    val (out, canonical) = advance(digest, existing, rows.toSeq)
-    if (existing.isEmpty) first.update(FirstSeen(canonical))
-    out.iterator
-  }
-}
 
 object DedupStream {
   case class DocEvent(doc_id: Long, digest: String)
@@ -61,19 +42,21 @@ object DedupStream {
   /** Wire the dedup gate onto a (doc_id, text) stream: digest map-side
     * with the SAME normalization as the batch `dedup_normalized_groups`
     * (casefold + whitespace-collapse + trim — the stream and batch
-    * passes must agree on what counts as a duplicate), then one keyed
-    * stateful stage (RocksDB state store, which transformWithState
-    * requires). */
+    * passes must agree on what counts as a duplicate), then one
+    * [[KeyedFold]] stage. */
   def dedup(docs: Dataset[(Long, String)]): Dataset[Decision] = {
     val s = docs.sparkSession
     import s.implicits._
-    docs.toDF("doc_id", "text")
+    val events = docs.toDF("doc_id", "text")
       .select(col("doc_id"),
         md5(trim(regexp_replace(lower(col("text")), "\\s+", " "))
           .cast("binary")).as("digest"))
       .as[DocEvent]
-      .groupByKey(_.digest)(Encoders.STRING)
-      .transformWithState(new DedupStream(), TimeMode.None(),
-        OutputMode.Append())(Encoders.product[Decision])
+    KeyedFold(events.groupByKey(_.digest)(Encoders.STRING), "first",
+      Encoders.product[FirstSeen], Encoders.product[Decision]) {
+      (digest, stored, rows) =>
+        val (out, canonical) = advance(digest, stored.map(_.doc_id), rows)
+        (out, Some(FirstSeen(canonical)))
+    }
   }
 }

@@ -1,13 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Streaming per-entity EWMA maintenance: the incremental twin of the
   * batch `ts_ewma_user` fold (e_0 = x_0, e_i = α·x_i + (1−α)·e_{i−1},
   * α = 0.5 over integer-cents doubles).
   *
-  * EWMA is ORDER-DEPENDENT, so the processor is explicit about order:
+  * EWMA is ORDER-DEPENDENT, so the stream is explicit about order:
   * rows are applied in (ts, event_id) order WITHIN each micro-batch
   * (intra-batch disorder is repaired by a bounded sort of that batch's
   * rows for the key), and a row at or before the last applied
@@ -30,26 +29,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * fold from scratch — for a feature store that is the desired
   * cold-start semantics (a months-stale EWMA is not a usable prior).
   */
-class EwmaStream(ttl: Option[java.time.Duration] = None)
-    extends StatefulProcessor[Long, EwmaStream.Obs, EwmaStream.Feat] {
-  import EwmaStream._
-
-  @transient private var cur: org.apache.spark.sql.streaming.ValueState[Feat] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    cur = getHandle.getValueState[Feat](
-      "ewma", Encoders.product[Feat],
-      ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-
-  override def handleInputRows(key: Long, rows: Iterator[Obs],
-      timers: TimerValues): Iterator[Feat] = {
-    val prev = if (cur.exists()) Some(cur.get()) else None
-    val (out, next) = advance(key, prev,
-      rows.toArray.sortBy(o => (o.ts, o.event_id)).toSeq)
-    next.filter(n => prev.forall(_ != n)).foreach(cur.update)
-    out.iterator
-  }
-}
 
 object EwmaStream {
   case class Obs(user_id: Long, ts: Long, event_id: Long, v: Double)
@@ -90,16 +69,13 @@ object EwmaStream {
     }
   }
 
-  /** Wire EWMA maintenance onto an observation stream (RocksDB state
-    * store, which transformWithState requires). A
-    * `ttl` expires idle entity state (needs processing-time mode). */
+  /** Wire EWMA maintenance onto an observation stream through
+    * [[KeyedFold]], sorting each key's batch by (ts, event_id) first.
+    * A `ttl` expires idle entity state. */
   def features(obs: Dataset[Obs],
-      ttl: Option[java.time.Duration] = None): Dataset[Feat] = {
-    implicit val outEnc = Encoders.product[Feat]
-    val timeMode = TtlModes.timeModeFor(ttl)
-    obs
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new EwmaStream(ttl), timeMode,
-        OutputMode.Append())
-  }
+      ttl: Option[java.time.Duration] = None): Dataset[Feat] =
+    KeyedFold(obs.groupByKey(_.user_id)(Encoders.scalaLong), "ewma",
+      Encoders.product[Feat], Encoders.product[Feat], ttl) {
+      (key, prev, rows) => advance(key, prev, rows.sortBy(o => (o.ts, o.event_id)))
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Streaming growth accounting: first-seen detection per entity — the
   * incremental twin of the batch `behavior_cumulative_users` identity
@@ -35,25 +34,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * correction channel is a CDC concern ([[CdcStream]]), not a gate
   * concern.
   */
-class FirstSeenStream(ttl: Option[java.time.Duration] = None)
-    extends StatefulProcessor[Long, FirstSeenStream.Obs, FirstSeenStream.FirstSeen] {
-  import FirstSeenStream._
-
-  @transient private var seen: org.apache.spark.sql.streaming.ValueState[FirstSeen] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    seen = getHandle.getValueState[FirstSeen](
-      "first_seen", Encoders.product[FirstSeen],
-      ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-
-  override def handleInputRows(key: Long, rows: Iterator[Obs],
-      timers: TimerValues): Iterator[FirstSeen] = {
-    val prev = if (seen.exists()) Some(seen.get()) else None
-    val (out, next) = advance(key, prev, rows.toSeq)
-    if (prev.forall(_ != next)) seen.update(next)
-    out.iterator
-  }
-}
 
 object FirstSeenStream {
   case class Obs(user_id: Long, day: Long, ts: Long)
@@ -84,16 +64,15 @@ object FirstSeenStream {
     }
   }
 
-  /** Wire first-seen detection onto an observation stream (RocksDB
-    * state store). A `ttl` expires idle entities, turning the
+  /** Wire first-seen detection onto an observation stream through
+    * [[KeyedFold]]. A `ttl` expires idle entities, turning the
     * semantics into trailing-horizon first-seen. */
   def firstSeen(obs: Dataset[Obs],
-      ttl: Option[java.time.Duration] = None): Dataset[FirstSeen] = {
-    implicit val outEnc = Encoders.product[FirstSeen]
-    val timeMode = TtlModes.timeModeFor(ttl)
-    obs
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new FirstSeenStream(ttl), timeMode,
-        OutputMode.Append())
-  }
+      ttl: Option[java.time.Duration] = None): Dataset[FirstSeen] =
+    KeyedFold(obs.groupByKey(_.user_id)(Encoders.scalaLong), "first_seen",
+      Encoders.product[FirstSeen], Encoders.product[FirstSeen], ttl) {
+      (key, prev, rows) =>
+        val (out, next) = advance(key, prev, rows)
+        (out, Some(next))
+    }
 }

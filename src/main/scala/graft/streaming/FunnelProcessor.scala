@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Streaming conversion funnel: the incremental twin of the batch
   * `funnel_stages` query. Per-user keyed state holds the furthest
@@ -16,27 +15,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * Late/out-of-order events that cannot advance the funnel are simply
   * ignored — the greedy-earliest semantics make replays idempotent.
   */
-class FunnelProcessor
-    extends StatefulProcessor[Long, FunnelProcessor.FunnelEvent, FunnelProcessor.StageAdvance] {
-  import FunnelProcessor._
-
-  @transient private var stage: org.apache.spark.sql.streaming.ValueState[StageState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    stage = getHandle.getValueState[StageState](
-      "stage", Encoders.product[StageState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[FunnelEvent],
-      timers: TimerValues): Iterator[StageAdvance] = {
-    val st0 = if (stage.exists()) stage.get() else StageState(0, Long.MinValue)
-    // batch-local time order so intra-batch progressions resolve the
-    // same way the batch query's min-chain does
-    val (out, st) = advance(user, st0,
-      rows.toSeq.sortBy(r => (r.sec, r.event_id)))
-    if (st.stage > 0) stage.update(st)
-    out.iterator
-  }
-}
 
 object FunnelProcessor {
   /** Funnel stage order — event types outside the funnel never match. */
@@ -68,11 +46,13 @@ object FunnelProcessor {
     (out.result(), st)
   }
 
-  def advances(events: Dataset[FunnelEvent]): Dataset[StageAdvance] = {
-    implicit val outEnc = Encoders.product[StageAdvance]
-    events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new FunnelProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  /** Wire the funnel onto an event stream through [[KeyedFold]]. Each
+    * key's batch is sorted by (sec, event_id) first, so intra-batch
+    * progressions resolve the way the batch query's min-chain does. */
+  def advances(events: Dataset[FunnelEvent]): Dataset[StageAdvance] =
+    KeyedFold.fromZero(events.groupByKey(_.user_id)(Encoders.scalaLong),
+      "stage", StageState(0, Long.MinValue), Encoders.product[StageState],
+      Encoders.product[StageAdvance]) {
+      (user, st, rows) => advance(user, st, rows.sortBy(r => (r.sec, r.event_id)))
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Streaming KMV distinct sketch: the incremental twin of the batch
   * [[graft.analytics.KmvQueries]] family. Keyed state holds each key's
@@ -20,24 +19,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * is full, exact count below k), so a batch rebuild and the stream
   * agree bit-for-bit on identical inputs (pinned in KmvStreamSpec).
   */
-class KmvStream(k: Int)
-    extends StatefulProcessor[String, KmvStream.HashEvent, KmvStream.SketchRow] {
-  import KmvStream._
-
-  @transient private var sketch: org.apache.spark.sql.streaming.ValueState[Sketch] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    sketch = getHandle.getValueState[Sketch](
-      "sketch", Encoders.product[Sketch], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[HashEvent],
-      timers: TimerValues): Iterator[SketchRow] = {
-    val prev = if (sketch.exists()) sketch.get() else Sketch(0L, 0L, Seq.empty)
-    val (out, st) = advance(key, prev, rows.toSeq, k)
-    sketch.update(st)
-    out.iterator
-  }
-}
 
 object KmvStream {
   case class HashEvent(key: String, hash: Long)
@@ -81,13 +62,10 @@ object KmvStream {
     }
   }
 
-  /** Wire the sketch maintainer onto a hash stream (RocksDB state
-    * store, which transformWithState requires). */
-  def sketches(events: Dataset[HashEvent], k: Int): Dataset[SketchRow] = {
-    implicit val outEnc = Encoders.product[SketchRow]
-    events
-      .groupByKey(_.key)(Encoders.STRING)
-      .transformWithState(new KmvStream(k), TimeMode.None(),
-        OutputMode.Append())
-  }
+  /** Wire the sketch maintainer onto a hash stream through
+    * [[KeyedFold]]. */
+  def sketches(events: Dataset[HashEvent], k: Int): Dataset[SketchRow] =
+    KeyedFold.fromZero(events.groupByKey(_.key)(Encoders.STRING), "sketch",
+      Sketch(0L, 0L, Seq.empty), Encoders.product[Sketch],
+      Encoders.product[SketchRow]) { (key, prev, rows) => advance(key, prev, rows, k) }
 }

@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Streaming NEAR-dup gate: the incremental twin of the batch
   * MinHash+LSH candidate pipeline (`dedup_lsh_candidates`). Each
@@ -32,26 +30,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * its doc already a member (or the canonical) and emits nothing —
   * the decision it re-derives is already downstream.
   */
-class LshStream
-    extends StatefulProcessor[String, LshStream.BandEvent, LshStream.BandHit] {
-  import LshStream._
-
-  @transient private var bucket: org.apache.spark.sql.streaming.ValueState[BucketState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    bucket = getHandle.getValueState[BucketState](
-      "bucket", Encoders.product[BucketState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[BandEvent],
-      timers: TimerValues): Iterator[BandHit] = {
-    val st0 = if (bucket.exists()) bucket.get()
-      else BucketState(-1L, Seq.empty)
-    // deterministic within a batch regardless of arrival order
-    val (out, st) = advance(st0, rows.toSeq.sortBy(_.doc_id))
-    bucket.update(st)
-    out.iterator
-  }
-}
 
 object LshStream {
   /** Same hot-bucket bound as the batch pipeline (DedupQueries). */
@@ -91,14 +69,17 @@ object LshStream {
     * stream — the map-side banding (native MinHash signature + band
     * hashes) is the SAME expression pipeline the batch dedup uses, so
     * stream and batch agree on what lands in a bucket. Keyed by the
-    * (band_idx, band_hash) pair rendered as one string key. */
+    * (band_idx, band_hash) pair rendered as one string key, through
+    * [[KeyedFold]]; each bucket's batch is sorted by doc_id first, so
+    * arrival order inside a batch cannot pick the canonical. */
   def gate(bands: Dataset[(Long, Int, Long)]): Dataset[BandHit] = {
     val s = bands.sparkSession
     import s.implicits._
-    bands.toDF("doc_id", "band_idx", "band_hash")
+    val events = bands.toDF("doc_id", "band_idx", "band_hash")
       .as[BandEvent]
-      .groupByKey(e => s"${e.band_idx}:${e.band_hash}")(Encoders.STRING)
-      .transformWithState(new LshStream(), TimeMode.None(),
-        OutputMode.Append())(Encoders.product[BandHit])
+    KeyedFold.fromZero(
+      events.groupByKey(e => s"${e.band_idx}:${e.band_hash}")(Encoders.STRING),
+      "bucket", BucketState(-1L, Seq.empty), Encoders.product[BucketState],
+      Encoders.product[BandHit]) { (_, st, rows) => advance(st, rows.sortBy(_.doc_id)) }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Streaming row-pattern detection (CEP) — the incremental twin of the
   * batch `behavior_pattern_regex` browse-to-buy pattern `v[^p]*p`:
@@ -24,30 +23,11 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * tape (the [[EwmaStream]]/[[TrailingDistinctStream]] absorb-late
   * discipline). And because the batch query truncates every user at
   * its first [[graft.analytics.BehaviorQueries.MaxSeqEvents]] events
-  * "as part of the query's semantics", the processor spends the same
+  * "as part of the query's semantics", the matcher spends the same
   * per-user budget: once `seen` reaches the cap, further events are
   * ignored — stream ≡ batch for power users past the cap, instead of
   * the stream silently counting matches the batch never sees.
   */
-class PatternProcessor
-    extends StatefulProcessor[Long, PatternProcessor.PatternEvent, PatternProcessor.PatternMatch] {
-  import PatternProcessor._
-
-  @transient private var st: org.apache.spark.sql.streaming.ValueState[MatchState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[MatchState](
-      "pattern", Encoders.product[MatchState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[PatternEvent],
-      timers: TimerValues): Iterator[PatternMatch] = {
-    val s0 = if (st.exists()) st.get() else Empty
-    val (out, s) = advance(user, s0,
-      rows.toSeq.sortBy(r => (r.sec, r.event_id)))
-    st.update(s)
-    out.iterator
-  }
-}
 
 object PatternProcessor {
   case class PatternEvent(user_id: Long, event_id: Long,
@@ -87,11 +67,12 @@ object PatternProcessor {
     (out.result(), s)
   }
 
-  def matches(events: Dataset[PatternEvent]): Dataset[PatternMatch] = {
-    implicit val outEnc = Encoders.product[PatternMatch]
-    events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new PatternProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  /** Wire the matcher onto an event stream through [[KeyedFold]],
+    * sorting each key's batch by (sec, event_id) first. */
+  def matches(events: Dataset[PatternEvent]): Dataset[PatternMatch] =
+    KeyedFold.fromZero(events.groupByKey(_.user_id)(Encoders.scalaLong),
+      "pattern", Empty, Encoders.product[MatchState],
+      Encoders.product[PatternMatch]) {
+      (user, s, rows) => advance(user, s, rows.sortBy(r => (r.sec, r.event_id)))
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Streaming per-key token-bucket rate limiter — the admission gate an
   * ingest pipeline puts in front of expensive downstream stages
@@ -26,27 +25,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * O(distinct keys), stream-volume-independent; admission is one state
   * read-modify-write per event, no shuffle beyond the keying exchange.
   */
-class RateLimitStream
-    extends StatefulProcessor[Long, RateLimitStream.Event, RateLimitStream.Verdict] {
-  import RateLimitStream._
-
-  @transient private var bucket: org.apache.spark.sql.streaming.ValueState[Bucket] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    bucket = getHandle.getValueState[Bucket](
-      "bucket", Encoders.product[Bucket], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[Event],
-      timers: TimerValues): Iterator[Verdict] = {
-    val st0 =
-      if (bucket.exists()) bucket.get()
-      else Bucket(CapacityMilli, Long.MinValue)
-    val (out, st) = advance(key, st0,
-      rows.toSeq.sortBy(e => (e.ts_ms, e.event_id)))
-    bucket.update(st)
-    out.iterator
-  }
-}
 
 object RateLimitStream {
   /** 5-token burst capacity, 1 token/event-time-second refill, 1 token
@@ -84,15 +62,15 @@ object RateLimitStream {
   }
 
   /** Wire the limiter onto an (event_id, user_id, ts_ms) stream: one
-    * keyed stateful stage (RocksDB state store, which
-    * transformWithState requires). */
+    * [[KeyedFold]] stage, each key's batch sorted by (ts, event_id). */
   def limit(events: Dataset[(Long, Long, Long)]): Dataset[Verdict] = {
     val s = events.sparkSession
     import s.implicits._
-    events.toDF("event_id", "user_id", "ts_ms")
-      .as[Event]
+    val keyed = events.toDF("event_id", "user_id", "ts_ms").as[Event]
       .groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new RateLimitStream(), TimeMode.None(),
-        OutputMode.Append())(Encoders.product[Verdict])
+    KeyedFold.fromZero(keyed, "bucket", Bucket(CapacityMilli, Long.MinValue),
+      Encoders.product[Bucket], Encoders.product[Verdict]) {
+      (key, st, rows) => advance(key, st, rows.sortBy(e => (e.ts_ms, e.event_id)))
+    }
   }
 }

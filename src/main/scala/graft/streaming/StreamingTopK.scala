@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Streaming leaderboard: the incremental twin of the batch
   * [[graft.plans.TopKPerKey]] operator. Keyed state holds each
@@ -17,24 +16,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * k-length list. Emissions are per-(batch, channel) deltas, not
   * per-event.
   */
-class StreamingTopK(k: Int)
-    extends StatefulProcessor[String, StreamingTopK.ValueEvent, StreamingTopK.LeaderRow] {
-  import StreamingTopK._
-
-  @transient private var board: org.apache.spark.sql.streaming.ValueState[Board] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    board = getHandle.getValueState[Board](
-      "board", Encoders.product[Board], TTLConfig.NONE)
-
-  override def handleInputRows(channel: String, rows: Iterator[ValueEvent],
-      timers: TimerValues): Iterator[LeaderRow] = {
-    val prev = if (board.exists()) board.get() else Board(0L, Seq.empty)
-    val (out, st) = advance(channel, prev, rows.toSeq, k)
-    if (st.version != prev.version) board.update(st)
-    out.iterator
-  }
-}
 
 object StreamingTopK {
   case class ValueEvent(channel: String, event_id: Long, value: Double)
@@ -86,13 +67,9 @@ object StreamingTopK {
     }
   }
 
-  /** Wire the leaderboard onto an event stream (RocksDB state store,
-    * which transformWithState requires). */
-  def leaderboard(events: Dataset[ValueEvent], k: Int): Dataset[LeaderRow] = {
-    implicit val outEnc = Encoders.product[LeaderRow]
-    events
-      .groupByKey(_.channel)(Encoders.STRING)
-      .transformWithState(new StreamingTopK(k), TimeMode.None(),
-        OutputMode.Append())
-  }
+  /** Wire the leaderboard onto an event stream through [[KeyedFold]]. */
+  def leaderboard(events: Dataset[ValueEvent], k: Int): Dataset[LeaderRow] =
+    KeyedFold.fromZero(events.groupByKey(_.channel)(Encoders.STRING), "board",
+      Board(0L, Seq.empty), Encoders.product[Board],
+      Encoders.product[LeaderRow]) { (channel, prev, rows) => advance(channel, prev, rows, k) }
 }

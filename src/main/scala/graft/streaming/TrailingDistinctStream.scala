@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues}
 
 /** Streaming twin of the batch `window_trailing_distinct_users`
   * interval-stabbing decomposition (WindowQueries): the exact
@@ -10,7 +9,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * The batch query merges each user's activity days into disjoint
   * covered-window segments and emits +1 at each segment start and −1
   * past its end; the per-day prefix sum of those deltas IS the exact
-  * sliding COUNT(DISTINCT). This processor maintains the SAME segment
+  * sliding COUNT(DISTINCT). This stream maintains the SAME segment
   * decomposition as per-user state and emits the same ±1 deltas
   * incrementally:
   *
@@ -27,7 +26,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * semantics across splits).
   *
   * Ordering contract: within a micro-batch the key's rows are sorted
-  * in the handler (arrival order inside a batch is arbitrary), and
+  * before the fold (arrival order inside a batch is arbitrary), and
   * across batches each user's days must arrive non-decreasing — the
   * same event-time-ordered-ingest assumption the suite's other
   * incremental twins make; a day at or before the user's last seen
@@ -46,33 +45,13 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * distinct; the emitted correction pairs cancel in the day aggregate
   * so the output table stays calendar-bounded no matter the corpus.
   */
-class TrailingDistinctStream(windowDays: Long)
-    extends StatefulProcessor[Long, TrailingDistinctStream.Obs,
-      TrailingDistinctStream.Delta] {
-  import TrailingDistinctStream._
-
-  @transient private var seg: org.apache.spark.sql.streaming.ValueState[Seg] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    seg = getHandle.getValueState[Seg]("seg", Encoders.product[Seg],
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[Obs],
-      timers: TimerValues): Iterator[Delta] = {
-    val st = if (seg.exists()) seg.get() else Seg(Long.MinValue, 0L)
-    val (out, st2) = advance(key, st,
-      rows.map(_.day).toArray.sorted.toSeq, windowDays)
-    seg.update(st2)
-    out.iterator
-  }
-}
 
 object TrailingDistinctStream {
   case class Obs(user_id: Long, day: Long)
   case class Seg(last_day: Long, n_late: Long)
   case class Delta(user_id: Long, day: Long, delta: Long)
 
-  /** The PURE per-batch transition the processor executes: fold the
+  /** The PURE per-batch transition the stream executes: fold the
     * key's sorted batch days through the segment state, emitting the
     * ±1 deltas. Extracted so property tests can drive thousands of
     * random interleavings without a streaming harness
@@ -108,16 +87,16 @@ object TrailingDistinctStream {
   }
 
   /** Wire the segment-delta maintenance onto an activity stream
-    * (RocksDB state store). Aggregate the output with
+    * through [[KeyedFold]], each key's batch days sorted first.
+    * Aggregate the output with
     * `groupBy(day).agg(sum(delta))` + a prefix sum over the day spine
     * to read the exact trailing-`windowDays` distinct count. */
   def deltas(obs: Dataset[Obs], windowDays: Long): Dataset[Delta] = {
     import org.apache.spark.sql.functions.{abs, col, count, sum, when}
-    implicit val outEnc = Encoders.product[Delta]
-    obs
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new TrailingDistinctStream(windowDays),
-        TimeMode.None(), OutputMode.Append())
+    KeyedFold.fromZero(obs.groupByKey(_.user_id)(Encoders.scalaLong), "seg",
+      Seg(Long.MinValue, 0L), Encoders.product[Seg], Encoders.product[Delta]) {
+      (key, st, rows) => advance(key, st, rows.map(_.day).sorted, windowDays)
+    }
       // per-batch observability: late/duplicate absorptions (the
       // zero-delta markers) and live segment deltas land in
       // StreamingQueryProgress.observedMetrics, where StatusSnapshot
